@@ -14,19 +14,28 @@ import org.apache.spark.sql.functions._
  * semantics; the default dedups tokens (documented divergence,
  * SURVEY.md §2.4 Q7).
  *
- * Scale: the query token set is tiny → explicit `broadcast()` makes the
- * join a BroadcastHashJoin with zero shuffle of the score table; the only
- * shuffle is the final groupBy(doc), which Catalyst partial-aggregates
- * map-side.
+ * Scale: the query terms prune the tf-idf chain. A `term IN (query
+ * terms)` filter goes in front of the join; Catalyst pushes it through
+ * the tfidf projection, the numDocs cross join and the df join into both
+ * (term, doc) aggregates, down to just above the tokenizer, so tf and df
+ * are computed for the query terms only, never for the whole vocabulary.
+ * The query token set is tiny → explicit `broadcast()` makes the join a
+ * BroadcastHashJoin with zero shuffle of the score table; the join stays
+ * (it carries the per-token multiplicity of `parityDuplicates`), and the
+ * only shuffle after it is the final groupBy(doc), which Catalyst
+ * partial-aggregates map-side.
  */
 object Search {
 
+  /** Per-doc sum of the query tokens' tfidf — one row per matching
+    * token, so a repeated token counts twice. The filter on the distinct
+    * tokens scopes `scores`' lineage to the query terms (see above). */
   def searchTokens(scores: DataFrame, tokens: Seq[String]): DataFrame = {
     val spark = scores.sparkSession
     import spark.implicits._
-    val queryDf = tokens.toDF("term")
     scores
-      .join(broadcast(queryDf), Seq("term"), "inner")
+      .where(col("term").isin(tokens.distinct: _*))
+      .join(broadcast(tokens.toDF("term")), Seq("term"), "inner")
       .groupBy(col("doc"))
       .agg(sum(col("tfidf")).as("score"))
   }
@@ -45,15 +54,17 @@ object Search {
   /**
    * Conjunctive (AND) search — the search mode the reference's OR-sum
    * cannot express: only documents containing EVERY query term score,
-   * still by summed tf-idf. Same broadcast semi-join plan as [[search]]
-   * plus a HAVING on the matched distinct-term count (terms are unique
-   * per (term, doc) after aggregation, so `count(*)` IS the distinct
-   * match count) — no second pass, no intersection join chain.
+   * still by summed tf-idf. Same term-scoped broadcast semi-join plan as
+   * [[searchTokens]] plus a HAVING on the matched distinct-term count
+   * (terms are unique per (term, doc) after aggregation, so `count(*)` IS
+   * the distinct match count) — no second pass, no intersection join
+   * chain.
    */
   def searchAllTokens(scores: DataFrame, tokens: Seq[String]): DataFrame = {
     val spark = scores.sparkSession
     import spark.implicits._
     scores
+      .where(col("term").isin(tokens.distinct: _*))
       .join(broadcast(tokens.distinct.toDF("term")), Seq("term"), "inner")
       .groupBy(col("doc"))
       .agg(sum(col("tfidf")).as("score"), count(lit(1)).as("_matched"))
@@ -153,10 +164,11 @@ object Search {
    *
    * @param dfViaBroadcast df strategy, the same trade-off as
    *        `TfIdf.tfidf`: broadcast join back (default — skew-safe, no
-   *        full-table shuffle on the hot `term` key, costs a second
-   *        scan of the count lineage) vs a window over term (one scan,
-   *        but a full exchange on a skewed key). Flip only when the
-   *        vocabulary outgrows the broadcast threshold.
+   *        full-table shuffle on the hot `term` key; its df side reuses
+   *        the count lineage's exchange, see `TfIdf.documentFrequency`)
+   *        vs a window over term (a full exchange on a skewed key).
+   *        Flip only when the vocabulary outgrows the broadcast
+   *        threshold.
    */
   def bm25Scores(
       docs: DataFrame,
@@ -175,7 +187,7 @@ object Search {
       (col("num_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val withDf =
       if (dfViaBroadcast) {
-        val dfPerTerm = counts.groupBy(col("term")).agg(count(lit(1)).as("df"))
+        val dfPerTerm = TfIdf.documentFrequency(TfIdf.termFrequency(counts))
         withLen.join(broadcast(dfPerTerm), Seq("term"))
       } else {
         withLen.withColumn("df",

@@ -70,21 +70,37 @@ object TfIdf {
     log10(lit(1) + floor(numDocs.cast("double") / df.cast("double")))
 
   /**
+   * Document frequency per term from a [[termFrequency]] frame, for the
+   * two join-back strategies below. It counts `tf`, not a literal: the
+   * df side must keep the count of the (term, doc) aggregate it reads,
+   * so that column pruning leaves that aggregate's partial-aggregate
+   * exchange identical to the tf side's and AQE reuses it at runtime —
+   * the corpus is tokenized and shuffled once. `count(lit(1))` lets
+   * pruning drop the inner count, and so does `count(col("count"))`:
+   * `count` is non-nullable, so NullPropagation rewrites it to
+   * `count(1)`. `tf = 1 + log10(count)` is nullable by type (log10 of a
+   * non-positive number is null), so `count(tf)` survives; it is never
+   * null for count >= 1, so it still counts every (term, doc) row.
+   * PlanAuditSpec pins the reuse on q5, q5c, q6 and q69.
+   */
+  def documentFrequency(tf: DataFrame): DataFrame =
+    tf.groupBy(col("term")).agg(count(col("tf")).as("df"))
+
+  /**
    * O6 alternative — document frequency via a broadcast join back: the
    * per-term counts aggregate partial+final (map-side combine collapses a
    * stop-word term to one row per input partition, so term skew never
    * concentrates), the resulting vocab-sized table broadcasts, and the
-   * main table is NOT re-shuffled on the skewed term key. Trade-off vs
-   * the window (`withDocumentFrequency`): the tokenize+count lineage is
-   * evaluated twice (two corpus scans), but no full-table exchange on a
-   * skewed key and no giant window partitions. Prefer this at high scale
-   * when the vocabulary fits in a broadcast; prefer the window when scans
-   * dominate (cheap storage bandwidth, few hot terms).
+   * main table is NOT re-shuffled on the skewed term key. Both sides
+   * read the same (term, doc) exchange ([[documentFrequency]]), so the
+   * corpus is tokenized once. Trade-off vs the window
+   * (`withDocumentFrequency`): a vocab-sized df aggregate plus a
+   * broadcast build instead of a full-table exchange on the skewed term
+   * key. Prefer this when the vocabulary fits in a broadcast and terms
+   * are hot; the window costs no extra aggregate when nothing is hot.
    */
   def withDocumentFrequencyBroadcast(tf: DataFrame): DataFrame =
-    tf.join(
-      broadcast(tf.groupBy(col("term")).agg(count(lit(1)).as("df"))),
-      Seq("term"))
+    tf.join(broadcast(documentFrequency(tf)), Seq("term"))
 
   /**
    * O6 third strategy — df via a SALTED shuffle join, for the corner
@@ -96,16 +112,23 @@ object TfIdf {
    * from the doc, so a stop-word's rows spread across `salt` reducers
    * instead of piling onto one. Cost: the small side grows ×salt (it
    * is vocab-sized, not corpus-sized — cheap) and the join shuffles on
-   * (term, salt) instead of term. AQE's skew-join split covers the
-   * same failure mode adaptively; this is the explicit, planner-
-   * independent form.
+   * (term, salt) instead of term. As with the broadcast strategy, the
+   * df side reuses the tf side's (term, doc) exchange
+   * ([[documentFrequency]]). AQE's skew-join split covers the same
+   * failure mode adaptively; this is the explicit, planner-independent
+   * form.
    */
   def withDocumentFrequencySalted(tf: DataFrame, salt: Int = 16): DataFrame = {
     require(salt >= 1, s"salt must be >= 1, got $salt")
-    val rep = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val rep = documentFrequency(tf)
       .select(col("term"), col("df"),
         explode(sequence(lit(0), lit(salt - 1))).as("_s"))
-    tf.withColumn("_s", pmod(hash(col("doc")), lit(salt)))
+    // `pmod` is nullable by type, so a bare pmod join key makes Catalyst
+    // infer `isnotnull(pmod(...))` and push it into the tf side's scan;
+    // the tf side's (term, doc) exchange then differs from the df
+    // side's and is not reused. The coalesce is non-nullable and never
+    // changes the value (the divisor is a literal >= 1).
+    tf.withColumn("_s", coalesce(pmod(hash(col("doc")), lit(salt)), lit(0)))
       .join(rep, Seq("term", "_s"))
       .drop("_s")
   }
@@ -158,8 +181,12 @@ object TfIdf {
    * [[withDocumentFrequencySalted]] each own a corner; until now the
    * caller had to know which corner they were in):
    *
-   *  - no θ-hot term → "window": one corpus scan, and with no hot key
-   *    the term-partitioned exchange is safe — the cheapest plan wins;
+   *  - no θ-hot term → "window": with no hot key the term-partitioned
+   *    exchange of the (term, doc) table is safe, and it needs no df
+   *    aggregate or broadcast build. Every strategy tokenizes the
+   *    corpus once (the join-back ones share the tf side's exchange,
+   *    [[documentFrequency]]), so the choice is only about that term
+   *    exchange;
    *  - hot terms, vocabulary fits a broadcast → "broadcast": the df
    *    table broadcasts and the corpus is never re-shuffled on the
    *    skewed key;

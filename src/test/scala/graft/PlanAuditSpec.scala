@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, In, InSet, StringSplit}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+
 /**
  * Physical-plan regression guard over the whole declared query surface:
  * no CartesianProduct anywhere, and no BroadcastNestedLoopJoin except
@@ -241,9 +247,10 @@ class PlanAuditSpec extends SparkSpec {
                          // + the per-doc rank window
     "q68_search_phrase" -> 1, // map-only position scan + doc agg
     "q70_search_near" -> 1, // map-only window scan + doc agg
-    "q69_search_bm25" -> 6, // counts + dl window + df agg + stats twin
-                            // (runtime-reused); doc agg reuses the
-                            // window's partitioning — no 7th
+    "q69_search_bm25" -> 6, // counts ×2 (df side runtime-reused) + dl
+                            // window + df agg + stats twin (runtime-
+                            // reused); doc agg reuses the window's
+                            // partitioning — no 7th
     "q71_search_indexed" -> 1, // pruned index scan + doc agg
     "q72_winnow_fingerprints" -> 1, // map-only gen + (doc, fp) distinct
     "q73_sample_by_weight" -> 0, // map-only keep decision; avg(w) is a
@@ -255,7 +262,8 @@ class PlanAuditSpec extends SparkSpec {
     "q40b_dedup_bloom" -> 0, // bloom probe rides the SCAN (a data
                              // filter); confirm anti-join broadcasts at
                              // this SF, shuffles past threshold
-    "q5c_tfidf_salted" -> 4, // (term,doc) counts ×2 lineage scans +
+    "q5c_tfidf_salted" -> 4, // (term,doc) counts ×2 (the df side's is
+                             // runtime-reused: one tokenization) +
                              // term df agg + numDocs distinct; the
                              // salted join itself broadcasts at this SF
                              // (shape pinned under no-broadcast below)
@@ -447,5 +455,55 @@ class PlanAuditSpec extends SparkSpec {
           "no (term, _s) exchange found")
       }
     } finally spark.conf.set(threshold, old)
+  }
+
+  private def isTermIn(e: Expression): Boolean = e.exists {
+    case In(a: AttributeReference, _)    => a.name == "term"
+    case InSet(a: AttributeReference, _) => a.name == "term"
+    case _                               => false
+  }
+
+  test("q6/q7 push the query-term filter below both (term, doc) aggregates") {
+    // The search scores only the query terms: the tf side and the df
+    // side each count (term, doc) pairs, and both must do it over the
+    // query terms' tokens only, not over the whole vocabulary.
+    Seq("q6_search", "q7_rank").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+        .queryExecution.optimizedPlan
+      val termDocAggs = plan.collect {
+        case a: Aggregate if a.groupingExpressions.collect {
+            case r: AttributeReference => r.name
+          }.toSet == Set("term", "doc") => a
+      }
+      withClue(s"$name optimized plan:\n$plan\n") {
+        termDocAggs should have size 2
+        termDocAggs.foreach { a =>
+          assert(a.child.exists {
+            case f: Filter => isTermIn(f.condition)
+            case _         => false
+          }, "a (term, doc) aggregate reads tokens not filtered to the query terms")
+        }
+      }
+    }
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  test("tf-idf and bm25 tokenize the corpus once: the df side reuses the tf side's exchange") {
+    // AQE reuses an exchange only when it creates the query stages, so
+    // only the executed (final) plan shows the reuse.
+    Seq("q5_tfidf", "q5c_tfidf_salted", "q6_search", "q69_search_bm25").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      withClue(s"$name final plan:\n$plan\n") {
+        plan.toString should include ("isFinalPlan=true")
+        Aqe.collect(plan) { case r: ReusedExchangeExec => r } should not be empty
+        // the tokenizer's explode(split(line)); q5c's salt explode is not one
+        Aqe.collect(plan) {
+          case g: GenerateExec if g.generator.exists(_.isInstanceOf[StringSplit]) => g
+        } should have size 1
+      }
+    }
   }
 }

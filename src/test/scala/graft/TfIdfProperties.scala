@@ -59,6 +59,61 @@ object TfIdfProperties extends Properties("TfIdf") {
       got == expect
     }
 
+  /** Query token lists: corpus words and absent terms, duplicates
+    * likely (8 + 2 candidates, up to 6 picks), the empty list included. */
+  private val tokensGen: Gen[List[String]] =
+    Gen.chooseNum(0, 6).flatMap(n =>
+      Gen.listOfN(n, Gen.frequency(4 -> word, 1 -> Gen.oneOf("absent", "omega"))))
+
+  private def scoreMap(d: DataFrame): Map[String, Double] =
+    d.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+
+  /** Same doc set, scores equal up to summation order. */
+  private def sameScores(a: Map[String, Double], b: Map[String, Double]): Boolean =
+    a.keySet == b.keySet && a.forall { case (d, s) => math.abs(s - b(d)) <= 1e-9 }
+
+  /** The join-only formulations the term-scoped searches replace: the
+    * broadcast join alone selects the query terms, over the full table. */
+  private def joinOnlyAny(scores: DataFrame, tokens: Seq[String]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    scores.join(broadcast(tokens.toDF("term")), Seq("term"))
+      .groupBy(col("doc")).agg(sum(col("tfidf")).as("score"))
+  }
+
+  private def joinOnlyAll(scores: DataFrame, tokens: Seq[String]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    scores.join(broadcast(tokens.distinct.toDF("term")), Seq("term"))
+      .groupBy(col("doc"))
+      .agg(sum(col("tfidf")).as("score"), count(lit(1)).as("_matched"))
+      .where(col("_matched") === tokens.distinct.length)
+      .select(col("doc"), col("score"))
+  }
+
+  property("term-scoped searchTokens / searchAllTokens == join-only search") =
+    forAll(corpusGen, tokensGen) { (rows, tokens) =>
+      val scores = TfIdf.tfidf(df(rows))
+      sameScores(scoreMap(Search.searchTokens(scores, tokens)),
+          scoreMap(joinOnlyAny(scores, tokens))) &&
+        sameScores(scoreMap(Search.searchAllTokens(scores, tokens)),
+          scoreMap(joinOnlyAll(scores, tokens)))
+    }
+
+  property("parityDuplicates still counts a repeated query term twice") =
+    forAll(corpusGen, tokensGen) { (rows, tokens) =>
+      val query = tokens.mkString(" ")
+      val parity = scoreMap(
+        Search.search(df(rows), query, parityDuplicates = true))
+      val perToken = tokens.groupBy(identity).map { case (t, ts) => t -> ts.size }
+      // one tfidf addend per query-token occurrence, not per distinct term
+      val expected = TfIdf.tfidf(df(rows)).collect().toSeq
+        .map(r => (r.getAs[String]("term"), r.getAs[String]("doc"), r.getAs[Double]("tfidf")))
+        .collect { case (t, d, v) if perToken.contains(t) => d -> perToken(t) * v }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      sameScores(parity, expected)
+    }
+
   property("rank is search sorted desc with doc tie-break") =
     forAll(corpusGen) { rows =>
       val hits = Search.search(df(rows), "hello world")
