@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
 import graft.operators.{Dedup, Layout, Rank, Search, Similarity, TfIdf}
+import graft.sources.Corpus
 
 /** Shared loaders, oracle-SQL fragment builders, and the flagship
   * entry used by every per-domain query module (split out of the
@@ -60,8 +61,7 @@ private[graft] object EntryShared {
   /** `heavy = false`: this consumer's pre-exchange work is cheap per
     * row — skip the scan spread (see [[spread]]). */
   private[graft] def docs(spark: SparkSession, dir: String, heavy: Boolean): DataFrame =
-    spread(spark.read
-      .parquet(s"$dir/documents.parquet")
+    spread(Corpus.parquet(spark, s"$dir/documents.parquet")
       .select(col("doc_id").as("doc"), col("text").as("line")), heavy)
 
   private[graft] def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -69,7 +69,7 @@ private[graft] object EntryShared {
 
   private[graft] def tbl(
       spark: SparkSession, dir: String, name: String, heavy: Boolean): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val raw = Corpus.parquet(spark, s"$dir/$name.parquet")
     // the two per-row-heavy corpora ride the spread; the relational /
     // event tables shuffle at their first aggregate anyway
     name match {
@@ -107,9 +107,10 @@ private[graft] object EntryShared {
     * The fixture has shipped with both TIMESTAMP(MICROS) (which Spark
     * reads natively) and TIMESTAMP(NANOS) (which Spark's vectorized
     * reader rejects at schema inference). Branch on what the footer
-    * actually says instead of assuming a unit: if schema inference
-    * succeeds and `ts` is a native TimestampType, read naturally; only
-    * when inference throws (the NANOS case) fall back to an explicit
+    * actually says instead of assuming a unit: open the file once, and
+    * if schema inference succeeds and `ts` is a native TimestampType,
+    * that frame is the read; only when inference throws (the NANOS
+    * case) fall back to an explicit
     * LongType schema over the physical int64 and truncate ns → µs —
     * the same truncation DuckDB applies, so both engines see identical
     * ts either way. FixtureSpec additionally pins the decoded range
@@ -118,27 +119,28 @@ private[graft] object EntryShared {
   private[graft] def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val path = s"$dir/events.parquet"
-    val naturalTs =
+    val natural =
       try {
-        spark.read.parquet(path).schema("ts").dataType match {
-          case TimestampType | TimestampNTZType => true // MICROS/MILLIS
-          case _ => false // plain int64: historic nanos encoding
+        val df = Corpus.parquet(spark, path)
+        df.schema("ts").dataType match {
+          case TimestampType | TimestampNTZType => Some(df) // MICROS/MILLIS
+          case _ => None // plain int64: historic nanos encoding
         }
-      } catch { case _: Exception => false } // NANOS: inference itself throws
-    if (naturalTs)
+      } catch { case _: Exception => None } // NANOS: inference itself throws
+    natural match {
       // normalize NTZ → TimestampType (value-preserving under the UTC
       // session) so every downstream timestamp function sees the same
       // type whichever annotation the fixture carries
-      spark.read.parquet(path).withColumn("ts", col("ts").cast(TimestampType))
-    else {
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", LongType),
-        StructField("user_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      spark.read
-        .schema(schema)
-        .parquet(path)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case Some(df) => df.withColumn("ts", col("ts").cast(TimestampType))
+      case None =>
+        val schema = StructType(Seq(
+          StructField("event_id", LongType), StructField("ts", LongType),
+          StructField("user_id", LongType), StructField("event_type", StringType),
+          StructField("value", DoubleType), StructField("props", StringType)))
+        spark.read
+          .schema(schema)
+          .parquet(path)
+          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
     }
   }
 

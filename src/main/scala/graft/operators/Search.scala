@@ -313,8 +313,11 @@ object Search {
       .sortWithinPartitions(col("term"))
       .write.mode("overwrite").parquet(out)
 
+  /** Open a [[buildIndex]] output. Every probe re-opens the index, so
+    * the read goes through [[graft.sources.Corpus.parquet]]: while the
+    * index files are unchanged, opening it launches no schema job. */
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.Corpus.parquet(spark, path)
 
   /** Probe a read-back [[buildIndex]] frame: the term predicate is an
     * `isin` FILTER (not a join) precisely so it reaches the parquet

@@ -592,7 +592,9 @@ object Similarity {
       delta: DataFrame,
       path: String,
       dir: String): DataFrame = {
-    val cents = spark.read.parquet(resolvedCentroids(spark, path))
+    val cents = graft.sources.Corpus.parquet(spark, resolvedCentroids(spark, path))
+    // a plain read: every append adds files to the cells dir, so a
+    // listing-keyed schema memo would never hit here
     val metaCols = spark.read.parquet(dir).columns.toSeq
       .filterNot(Set("vec_id", "emb", "nrm", "cell"))
     ivfAssign(normed(delta, metaCols), cents, metaCols)

@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Corpus sources and sinks (SURVEY.md §2 O1/O12).
@@ -38,13 +42,85 @@ object Corpus {
    * source-agnostic.
    */
   def documentsParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .parquet(path)
+    parquet(spark, path)
       .select(col("doc_id").cast("string").as("doc"), col("text").as("line"))
 
   /** Generic table loader for the driver testdata dirs. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** A schema [[parquet]] inferred, and what it was inferred under. */
+  private final case class Inferred(
+      listing: Seq[(String, Long, Long)],
+      conf: Map[String, String],
+      schema: StructType)
+
+  /** Qualified path → its last successful inference; one entry per path. */
+  private val inferred = new ConcurrentHashMap[String, Inferred]()
+
+  /**
+   * Parquet read that skips schema inference on a path it has already
+   * inferred. Spark's parquet inference launches a job to read a footer
+   * on every `spark.read.parquet`, even when the files have not changed
+   * since the last read, so a path re-opened per request (an indexed
+   * search probe) pays one job per request for an unchanged schema.
+   * Here the driver lists the path's data files (the [[listDataFiles]]
+   * rule, with each file's length and mtime) and reuses the schema
+   * inferred for the same qualified path under the same listing and the
+   * same session SQL conf. A file added, removed or renamed, a changed
+   * length or mtime, or a conf change misses and re-infers; the new
+   * result replaces the path's entry. A failed inference throws and
+   * stores nothing, so the next read tries again.
+   *
+   * The returned frame is `spark.read.schema(schema).parquet(path)`: a
+   * new relation on every call, with its own file listing and attribute
+   * ids, so two reads of one path self-join like two plain reads.
+   *
+   * @param path a parquet file or directory (not a glob)
+   */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val base = new Path(path)
+    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    val key = fs.makeQualified(base).toString
+    // listed BEFORE inferring: files landing in between make the stored
+    // listing stale, so the next read misses rather than trusting it
+    val listing = dataFiles(fs, base)
+    val conf = spark.sessionState.conf.getAllConfs
+    val schema = Option(inferred.get(key))
+      .filter(e => e.listing == listing && e.conf == conf)
+      .map(_.schema)
+      .getOrElse {
+        val s = spark.read.parquet(path).schema
+        inferred.put(key, Inferred(listing, conf, s))
+        s
+      }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** Relative paths of the DATA files under `dir` — hidden/marker
+    * entries (`_SUCCESS`, dotfiles) excluded. Driver-side FS walk,
+    * metadata-scale by construction (the same listing every parquet
+    * read of the directory already performs on the driver). */
+  private[graft] def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
+    val base = new Path(dir)
+    dataFiles(base.getFileSystem(spark.sessionState.newHadoopConf()), base).map(_._1)
+  }
+
+  /** (relative path, length, mtime) of every data file under `base`,
+    * sorted by path: the one rule for what counts as a data file. */
+  private def dataFiles(fs: FileSystem, base: Path): Seq[(String, Long, Long)] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    val it = fs.listFiles(base, true)
+    val baseUri = fs.makeQualified(base).toUri
+    while (it.hasNext) {
+      val f = it.next()
+      val name = f.getPath.getName
+      if (!name.startsWith("_") && !name.startsWith("."))
+        out += ((baseUri.relativize(f.getPath.toUri).getPath,
+          f.getLen, f.getModificationTime))
+    }
+    out.toSeq.sortBy(_._1)
+  }
 
   /**
    * JSON-lines documents source (one object per line, doc_id/text fields),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.TfIdf
+import graft.sources.Corpus.listDataFiles
 
 /**
  * Structured Streaming variants of the engine's aggregations (extension
@@ -1871,26 +1872,6 @@ object StreamingOps {
         lit(null).cast(candsT).as(candsName),
         lit(null).cast(centsT).as("cents"),
         col("_f").as("meta")))
-  }
-
-  /** Relative paths of the DATA files under an index generation dir —
-    * hidden/marker entries (`_SUCCESS`, dotfiles) excluded. Driver-side
-    * FS walk, metadata-scale by construction (the same listing every
-    * parquet read of the directory already performs on the driver). */
-  private def listDataFiles(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(base, true)
-    val baseUri = fs.makeQualified(base).toUri
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith("."))
-        out += baseUri.relativize(f.getPath.toUri).getPath
-    }
-    out.toSeq.sorted
   }
 
   /** FULL-OUTER concat-merge of a SMALL delta's keyed arrays into a

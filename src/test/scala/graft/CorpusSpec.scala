@@ -1,9 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{functions => F}
 
+import graft.operators.Search
 import graft.sources.Corpus
 
 /** O1 text-directory source: doc identity = file basename
@@ -121,5 +125,104 @@ class CorpusSpec extends SparkSpec {
       // the pruned scan reads one of the two partitions
       plan should not include "lang=de"
     }
+  }
+
+  /** Spark jobs launched while `body` runs, counted on a drained bus. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; TestBus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("indexed search: the first plan build infers once, a rebuild launches no job") {
+    val idx = Files.createTempDirectory("graft-memo-idx").toString + "/index"
+    Search.buildIndex(
+      corpus("d1" -> "spark stream window", "d2" -> "stream of words"), idx,
+      fileCount = 2)
+    val first = jobsDuring(Search.searchIndexed(spark, idx, "spark stream"))
+    first should be <= 1
+    jobsDuring(Search.searchIndexed(spark, idx, "spark stream")) shouldBe 0
+    rowsOf(Search.searchIndexed(spark, idx, "stream")).map(_.head) shouldBe
+      Seq("d1", "d2")
+  }
+
+  test("parquet reader: an overwrite or an added file is seen on the next read") {
+    val s = spark
+    import s.implicits._
+    val p = Files.createTempDirectory("graft-memo-rw").toString + "/t"
+    Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(p)
+    rowsOf(Corpus.parquet(spark, p)) shouldBe Seq(Seq("1", "a"), Seq("2", "b"))
+    Seq((3L, 0.5, true)).toDF("k", "w", "f").write.mode("overwrite").parquet(p)
+    val over = Corpus.parquet(spark, p)
+    over.schema.map(f => f.name -> f.dataType.typeName) shouldBe
+      Seq("k" -> "long", "w" -> "double", "f" -> "boolean")
+    rowsOf(over) shouldBe Seq(Seq("3", "0.5", "true"))
+    Seq((4L, 1.5, false)).toDF("k", "w", "f").write.mode("append").parquet(p)
+    rowsOf(Corpus.parquet(spark, p)) shouldBe
+      Seq(Seq("3", "0.5", "true"), Seq("4", "1.5", "false"))
+  }
+
+  test("parquet reader: a change to the session's parquet conf re-infers") {
+    import scala.jdk.CollectionConverters._
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-memo-conf")
+    val t = Files.createDirectory(root.resolve("t"))
+    // two files with different columns: plain inference reads the first
+    // footer by path (a.parquet), schema merging reads both
+    Seq("a" -> Seq(1L).toDF("k"), "b" -> Seq((2L, 0.5)).toDF("k", "x")).foreach {
+      case (name, df) =>
+        val out = root.resolve(name)
+        df.coalesce(1).write.parquet(out.toString)
+        val part = Files.list(out).iterator().asScala
+          .find(_.getFileName.toString.startsWith("part-")).get
+        Files.move(part, t.resolve(s"$name.parquet"))
+    }
+    Corpus.parquet(spark, t.toString).columns.toSeq shouldBe Seq("k")
+    val key = "spark.sql.parquet.mergeSchema"
+    try {
+      spark.conf.set(key, "true")
+      Corpus.parquet(spark, t.toString).columns.toSeq shouldBe Seq("k", "x")
+    } finally spark.conf.unset(key)
+    Corpus.parquet(spark, t.toString).columns.toSeq shouldBe Seq("k")
+  }
+
+  test("parquet reader: two reads of one path are distinct relations") {
+    val s = spark
+    import s.implicits._
+    val p = Files.createTempDirectory("graft-memo-self").toString + "/t"
+    Seq((1L, "x"), (2L, "y")).toDF("k", "v").write.parquet(p)
+    val a = Corpus.parquet(spark, p)
+    val b = Corpus.parquet(spark, p)
+    rowsOf(a.join(b, a("k") === b("k")).select(a("k"), b("v"))) shouldBe
+      Seq(Seq("1", "x"), Seq("2", "y"))
+  }
+
+  test("parquet reader: a failed inference is not stored") {
+    val dir = Files.createTempDirectory("graft-memo-bad")
+    Files.writeString(dir.resolve("part-0.parquet"), "not a parquet file")
+    intercept[Exception](Corpus.parquet(spark, dir.toString))
+    intercept[Exception](Corpus.parquet(spark, dir.toString))
+  }
+
+  test("parquet reader keeps partition columns and partition pruning") {
+    val s = spark
+    import s.implicits._
+    val out = Files.createTempDirectory("graft-memo-part").toString + "/docs"
+    Corpus.writePartitionedParquet(
+      Seq((1L, "the cat", "en"), (2L, "der hund", "de")).toDF("doc_id", "text", "lang"),
+      Seq("lang"), out)
+    Corpus.parquet(spark, out).schema shouldBe spark.read.parquet(out).schema
+    val read = Corpus.parquet(spark, out).where(F.col("lang") === "en")
+    rowsOf(read) shouldBe Seq(Seq("1", "the cat", "en"))
+    read.queryExecution.executedPlan.toString should include regex
+      "PartitionFilters.*lang.*en"
   }
 }
