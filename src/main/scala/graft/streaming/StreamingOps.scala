@@ -1687,8 +1687,267 @@ object StreamingOps {
   def annServeState(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      filter: Option[Column] = None): DataFrame = {
-    val (cellsAt, tombsAt) = graft.operators.Similarity.resolvedIndex(spark, path)
+      filter: Option[Column] = None): DataFrame =
+    serveBuild(ServeCodec.Float, spark, path, Map.empty, filter)
+
+  /** A PQ codebook: cb(s)(j) = entry j of subspace s. */
+  private type Codebook = Array[Array[Array[Double]]]
+
+  /** What one serve call knows about its artifact: the meta params, the
+    * frozen PQ codebook (null for the other tiers) and the data files
+    * the cell arrays were read from. */
+  private final case class ServeHeader(
+      params: Map[String, String], codebook: Codebook, files: Seq[String])
+
+  /**
+   * One serve tier. The four tiers (float, PQ, Hamming, int8) share one
+   * artifact layout, one build ([[serveBuild]]), one probe
+   * ([[serveProbe]]), one refresh and one maintain; they differ only in
+   * what a codec declares — how a live index row encodes into a
+   * candidate struct and how a candidate scores against a prepared
+   * query row.
+   *
+   * @param cands the candidate column — DISTINCT per tier, so a
+   *        mis-paired artifact fails the probe's schema guard by name
+   * @param keys the tier's meta keys in recorded order (`filtered`
+   *        stands for the whole filter fragment)
+   * @param idField the candidate struct's vec-id field
+   * @param score the output score column, a field of [[ranked]]
+   */
+  private sealed abstract class ServeCodec(
+      val tier: String,
+      val cands: String,
+      val builder: String,
+      val search: String,
+      val keys: Seq[String],
+      val idField: String,
+      val score: String) {
+    /** The live index columns [[encode]] reads. */
+    def liveCols: Seq[Column] =
+      Seq(col("vec_id"), col("emb"), col("cell").cast("long"))
+    /** Extra one-row sections the artifact carries, each named like its
+      * one column, and their values for a header. */
+    def sections: Seq[String] = Nil
+    def sectionValues(h: ServeHeader): Seq[Column] = Nil
+    /** The frozen quantizer a build derives from the UNFILTERED live rows. */
+    def codebook(live: => DataFrame, params: Map[String, String]): Codebook = null
+    /** Live rows ([[liveCols]]) → (cell, `as` = one candidate struct). */
+    def encode(rows: DataFrame, h: ServeHeader, as: String): DataFrame
+    /** Refuse a refresh delta the frozen artifact cannot absorb. */
+    def checkDelta(live: DataFrame, h: ServeHeader): Unit = ()
+    /** Query rows → (q_vec_id, q_emb, q_nrm, plus the tier's query stats). */
+    def query(queries: DataFrame, h: ServeHeader): DataFrame = floatQuery(queries)
+    /** Per-query columns computed after the centroid cross. */
+    def probeCols(h: ServeHeader): Map[String, Column] = Map.empty
+    /** A candidate's sort struct: ascending order is the batch twin's
+      * ranking; it carries `n_vec_id` and the [[score]] field. */
+    def ranked(c: Column, h: ServeHeader): Column
+    protected def int(params: Map[String, String], key: String): Int =
+      metaInt(params, key, builder)
+  }
+
+  private object ServeCodec {
+    import org.apache.spark.sql.graft.VectorFunctions.dotProduct
+    import graft.operators.Similarity
+
+    /** Full float vectors; scored by the round-6 cosine. */
+    object Float extends ServeCodec("float", "cands", "annServeState",
+        "annSearchStream", Seq("filtered"), "vec_id", "cos") {
+      override def liveCols: Seq[Column] =
+        Seq(col("vec_id"), col("emb"), col("nrm"), col("cell").cast("long"))
+      def encode(rows: DataFrame, h: ServeHeader, as: String): DataFrame =
+        rows.select(col("cell"),
+          struct(col("vec_id"), col("emb"), col("nrm")).as(as))
+      def ranked(c: Column, h: ServeHeader): Column = {
+        val cos = round(dotProduct(c.getField("emb"), col("q_emb")) /
+          (c.getField("nrm") * col("q_nrm")), 6)
+        struct((-cos).as("negcos"), c.getField("vec_id").as("n_vec_id"),
+          cos.as("cos"))
+      }
+    }
+
+    /** m PQ code bytes per member through the artifact's FROZEN
+      * codebook; scored by the query's ADC lookup table. */
+    object Pq extends ServeCodec("pq", "pq_cands", "annServePqState",
+        "annSearchStreamPq", Seq("filtered", "m", "subDim", "k", "pqStride"),
+        "n_vec_id", "adc") {
+      override def sections: Seq[String] = Seq("codebook")
+      override def sectionValues(h: ServeHeader): Seq[Column] =
+        Seq(typedLit(h.codebook.map(_.map(_.toSeq).toSeq).toSeq))
+      // FROZEN second-stage quantizer: the codebook reads the UNFILTERED
+      // live rows, so codes are filter-independent — two predicates over
+      // the same index share every quantizer artifact, and parity with
+      // the batch ivfPqTopKFiltered holds code-for-code
+      override def codebook(live: => DataFrame, p: Map[String, String]): Codebook =
+        Similarity.pqCodebook(
+          live.select(col("vec_id"), col("emb").as("embedding")),
+          int(p, "m"), int(p, "subDim"), int(p, "k"), int(p, "pqStride"))
+      def encode(rows: DataFrame, h: ServeHeader, as: String): DataFrame =
+        rows.select(col("cell"), struct(col("vec_id").as("n_vec_id"),
+          Similarity.pqCodesCol(col("emb"), h.codebook, int(h.params, "subDim"))
+            .as("codes")).as(as))
+      override def checkDelta(live: DataFrame, h: ServeHeader): Unit = {
+        val k = int(h.params, "k")
+        val pqStride = int(h.params, "pqStride")
+        val seedClash = live
+          .where(pmod(col("vec_id"), lit(pqStride)) === 0 &&
+            col("vec_id") < k.toLong * pqStride)
+          .select(col("vec_id")).limit(1).collect()
+        require(seedClash.isEmpty,
+          s"refreshAnnServeState: appended vec_id " +
+            s"${seedClash.headOption.map(_.getLong(0)).getOrElse(-1L)} sits " +
+            s"at a PQ codebook seed position (vec_id ≡ 0 mod $pqStride, " +
+            s"< ${k.toLong * pqStride}) — a from-scratch annServePqState " +
+            "over the grown index would derive a DIFFERENT codebook, so " +
+            "patching with the artifact's frozen codebook would diverge " +
+            "from the rebuild contract; rebuild with annServePqState")
+      }
+      // the per-query ADC lookup table — the batch `lut` expression
+      // verbatim, evaluated once per arriving row
+      override def probeCols(h: ServeHeader): Map[String, Column] = {
+        val subDim = int(h.params, "subDim")
+        Map("_lut" -> array((0 until int(h.params, "m")).map { s =>
+          val qSub = slice(col("q_emb"), s * subDim + 1, subDim)
+          array(h.codebook(s).indices.map(j =>
+            dotProduct(qSub, typedLit(h.codebook(s)(j).toSeq))): _*)
+        }: _*))
+      }
+      def ranked(c: Column, h: ServeHeader): Column = {
+        val adc = round(
+          (0 until int(h.params, "m")).map { s =>
+            element_at(element_at(col("_lut"), s + 1),
+              element_at(c.getField("codes"), s + 1) + lit(1))
+          }.reduce(_ + _), 6)
+        struct((-adc).as("negadc"), c.getField("n_vec_id").as("n_vec_id"),
+          adc.as("adc"))
+      }
+    }
+
+    /** One packed long of sign bits per member; scored by XOR +
+      * popcount against the query's own signature. */
+    object Hamming extends ServeCodec("hamming", "h_cands",
+        "annServeHammingState", "annSearchStreamHamming",
+        Seq("bits", "filtered"), "n_vec_id", "hamming") {
+      def encode(rows: DataFrame, h: ServeHeader, as: String): DataFrame =
+        rows.select(col("cell"), struct(col("vec_id").as("n_vec_id"),
+          Similarity.lshBucketCol(col("emb"), int(h.params, "bits")).as("sig"))
+          .as(as))
+      override def query(queries: DataFrame, h: ServeHeader): DataFrame =
+        floatQuery(queries).withColumn("q_sig",
+          Similarity.lshBucketCol(col("q_emb"), int(h.params, "bits")))
+      // natural ascending struct order ≡ the batch window's
+      // (hamming asc, n_vec_id) — both fields sort ascending
+      def ranked(c: Column, h: ServeHeader): Column = struct(
+        bit_count(col("q_sig").bitwiseXOR(c.getField("sig"))).cast("long")
+          .as("hamming"),
+        c.getField("n_vec_id").as("n_vec_id"))
+    }
+
+    /** Byte codes plus five per-vector correction terms (the shared
+      * `int8Coded` expressions); scored by the int8SdcTopK expansion. */
+    object Int8 extends ServeCodec("int8", "i_cands", "annServeInt8State",
+        "annSearchStreamInt8", Seq("filtered"), "n_vec_id", "cos_sdc") {
+      override def liveCols: Seq[Column] = Seq(col("vec_id"),
+        col("emb").as("embedding"), col("cell").cast("long"))
+      def encode(rows: DataFrame, h: ServeHeader, as: String): DataFrame =
+        Similarity.int8Coded(rows, "n_", carry = Seq("cell"))
+          .select(col("cell"), struct(
+            col("n_vec_id"), col("n_q").as("q"), col("n_min").as("minv"),
+            col("n_s").as("scale"), col("n_d").as("d"), col("n_sum").as("sum"),
+            col("n_qq").as("qq")).as(as))
+      override def query(queries: DataFrame, h: ServeHeader): DataFrame =
+        Similarity.int8Coded(
+            queries.select(col("vec_id"), col("embedding")), "q_",
+            carry = Seq("embedding"))
+          .withColumn("q_emb", col("embedding").cast("array<double>"))
+          .withColumn("q_nrm", sqrt(dotProduct(col("q_emb"), col("q_emb"))))
+          .drop("embedding")
+      // the int8SdcTopK score tree verbatim: exact long inner product,
+      // then the fixed-order double corrections; ascending (coalesced
+      // −cos_sdc, n_vec_id) ≡ the batch (cos_sdc DESC NULLS LAST,
+      // n_vec_id) — a null score (zero-norm reconstruction) coalesces
+      // to +∞ and sorts last
+      def ranked(c: Column, h: ServeHeader): Column = {
+        def f(field: String) = c.getField(field)
+        // ‖x̂‖² = min²·d + 2·min·scale·Σq + scale²·Σq², for either side
+        def nrm2(mn: Column, sc: Column, d: Column, sum: Column, qq: Column) =
+          mn * mn * d + lit(2.0) * mn * sc * sum + sc * sc * qq
+        val ipq = aggregate(
+          zip_with(col("q_q"), f("q"), (a, b) => (a * b).cast("long")),
+          lit(0L), (s, v) => s + v)
+        val ip = col("q_min") * f("minv") * f("d") +
+          col("q_min") * f("scale") * f("sum") +
+          f("minv") * col("q_s") * col("q_sum") + col("q_s") * f("scale") * ipq
+        val nq = nrm2(col("q_min"), col("q_s"), col("q_d"), col("q_sum"), col("q_qq"))
+        val nn = nrm2(f("minv"), f("scale"), f("d"), f("sum"), f("qq"))
+        val sdc = when(nq > 0 && nn > 0, round(ip / (sqrt(nq) * sqrt(nn)), 6))
+        struct(coalesce(-sdc, lit(Double.MaxValue)).as("negsdc"),
+          f("n_vec_id").as("n_vec_id"), sdc.as("cos_sdc"))
+      }
+    }
+
+    val all: Seq[ServeCodec] = Seq(Float, Pq, Hamming, Int8)
+    /** The tier whose candidate column `state` carries. */
+    def of(state: DataFrame): Option[ServeCodec] =
+      all.find(c => state.columns.contains(c.cands))
+  }
+
+  /** The float query row every tier starts from: (q_vec_id, q_emb, q_nrm). */
+  private def floatQuery(queries: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graft.VectorFunctions.dotProduct
+    queries
+      .select(col("vec_id").as("q_vec_id"),
+        col("embedding").cast("array<double>").as("q_emb"))
+      .withColumn("q_nrm", sqrt(dotProduct(col("q_emb"), col("q_emb"))))
+  }
+
+  /** The meta fragment a codec records before the snapshot coordinates:
+    * its keys in order, `filtered` standing for the filter fragment. */
+  private def serveMeta(
+      codec: ServeCodec, params: Map[String, String], filterMeta: String): String =
+    codec.keys.map(k =>
+      if (k == "filtered") filterMeta else s"$k=${params(k)};").mkString
+
+  /** The index's pending tombstones, when any exist. */
+  private def tombstones(
+      spark: org.apache.spark.sql.SparkSession, tombsAt: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(tombsAt)
+    if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
+      Some(spark.read.parquet(tombsAt))
+    else None
+  }
+
+  /** Fold the index's pending tombstones out of `rows` (a broadcast
+    * anti-join on vec_id). */
+  private def withoutTombstones(
+      spark: org.apache.spark.sql.SparkSession,
+      tombsAt: String,
+      rows: DataFrame): DataFrame =
+    tombstones(spark, tombsAt)
+      .map(t => rows.join(broadcast(t), Seq("vec_id"), "left_anti"))
+      .getOrElse(rows)
+
+  /**
+   * The ONE serve build behind the four `annServe*State` entry points.
+   * The cell read resolves the index's CURRENT committed generation,
+   * pushes the (serialized, validated) `filter` into the cell-file scan
+   * as a parquet predicate, folds the pending tombstones out, and
+   * groups the codec-encoded live rows per cell; the coarse centroids
+   * (and PQ's codebook) stay FROZEN full-live-corpus artifacts — the
+   * q222 "quantizer never rebuilds per predicate" contract.
+   *
+   * @param params the codec's meta params (from the entry point's
+   *        arguments, or from an artifact [[maintainAnnIndexServing]]
+   *        rebuilds)
+   */
+  private def serveBuild(
+      codec: ServeCodec,
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      params: Map[String, String],
+      filter: Option[Column]): DataFrame = {
+    import graft.operators.Similarity
+    val (cellsAt, tombsAt) = Similarity.resolvedIndex(spark, path)
     // capture the file list FIRST and read the cells from that explicit
     // list: a concurrent append landing between a directory-scoped read
     // and the listing would record files in the artifact's files
@@ -1699,26 +1958,21 @@ object StreamingOps {
     // loud outcome).
     val files = listDataFiles(spark, cellsAt)
     val scan = readCellFiles(spark, cellsAt, files)
-    val (pred, filterMeta) = serializedFilter(scan, filter, "annServeState")
-    val rawCells = scan
-      .where(pred.getOrElse(lit(true)))
-      .select(col("vec_id"), col("emb"), col("nrm"), col("cell").cast("long"))
-    val fs = new org.apache.hadoop.fs.Path(tombsAt)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val live =
-      if (fs.exists(new org.apache.hadoop.fs.Path(tombsAt)))
-        rawCells.join(broadcast(spark.read.parquet(tombsAt)),
-          Seq("vec_id"), "left_anti")
-      else rawCells
-    val cellRows = live.groupBy(col("cell"))
-      .agg(collect_list(struct(col("vec_id"), col("emb"), col("nrm"))).as("cands"))
+    val (pred, filterMeta) = serializedFilter(scan, filter, codec.builder)
+    // the predicate (when present) applies to the raw scan so it pushes
+    // into the cell files as a parquet filter over the stored metadata
+    def live(p: Option[Column]): DataFrame = withoutTombstones(spark, tombsAt,
+      p.map(scan.where).getOrElse(scan).select(codec.liveCols: _*))
+    val h = ServeHeader(params, codec.codebook(live(None), params), files)
+    val cellRows = codec.encode(live(pred), h, "c")
+      .groupBy(col("cell")).agg(collect_list(col("c")).as(codec.cands))
     val centsRow = spark.read
-      .parquet(graft.operators.Similarity.resolvedCentroids(spark, path))
+      .parquet(Similarity.resolvedCentroids(spark, path))
       .agg(collect_list(
         struct(col("cent_id"), col("c_emb"), col("c_nrm"))).as("cents"))
-    serveStateAssembly(spark, cellRows, centsRow,
-      filterMeta + serveSnapshotMeta(spark, path, Some(files)),
-      files)
+    serveStateAssembly(spark, codec, cellRows, centsRow, h,
+      serveMeta(codec, params, filterMeta) +
+        serveSnapshotMeta(spark, path, Some(files)))
   }
 
   /**
@@ -1800,27 +2054,27 @@ object StreamingOps {
       (Some(parsed), s"filtered=2;filterSql=$b64;")
   }
 
-  /** Decode the predicate a `filtered=2` serve artifact carries —
-    * the [[serializedFilter]] inverse; absence fails naming the
-    * builder (a `filtered=2` meta without `filterSql` is a corrupted
-    * or hand-edited artifact). */
-  private def decodedFilter(
-      params: Map[String, String], builder: String): Column = {
+  /** The predicate a serve artifact baked — the [[serializedFilter]]
+    * inverse over a `filtered=2` meta row, None when unfiltered. A
+    * pre-convention opaque one (`filtered=1`) refuses: no refresh or
+    * repair can reproduce it; a `filtered=2` meta without `filterSql`
+    * is a corrupted or hand-edited artifact. */
+  private def bakedFilter(
+      params: Map[String, String], builder: String, op: String): Option[Column] = {
+    require(params("filtered") != "1",
+      s"$op: this artifact baked an OPAQUE metadata filter (built before " +
+        "the predicate-serialization convention) — the predicate cannot be " +
+        "recovered from the artifact alone; rebuild ONCE with the current " +
+        s"$builder(path, filter) and refreshes and repairs will work from " +
+        "then on (the predicate now travels in the meta row)")
+    if (params("filtered") != "2") return None
     require(params.contains("filterSql"),
       s"$builder artifact declares filtered=2 but carries no filterSql " +
         s"meta key — the artifact is corrupted; rebuild with $builder")
-    expr(new String(
+    Some(expr(new String(
       java.util.Base64.getDecoder.decode(params("filterSql")),
-      java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.charset.StandardCharsets.UTF_8)))
   }
-
-  /** The `filtered=…` meta fragment a refresh/rebuild carries forward
-    * from an existing artifact's params — `filtered=2;filterSql=…;`
-    * when a serialized predicate rides along, else `filtered=0;`. */
-  private def filterMetaOf(params: Map[String, String]): String =
-    if (params.getOrElse("filtered", "0") == "2")
-      s"filtered=2;filterSql=${params("filterSql")};"
-    else "filtered=0;"
 
   /** Read index rows from an EXPLICIT relative-path file list (the
     * capture-first discipline every serve build and refresh shares);
@@ -1832,46 +2086,44 @@ object StreamingOps {
     spark.read.option("basePath", cellsAt)
       .parquet(files.map(f => s"$cellsAt/$f"): _*)
 
-  /** Assemble a serve artifact from its parts — shared by the full
-    * builds ([[annServeState]] / [[annServeHammingState]] /
-    * [[annServeInt8State]]) and [[refreshAnnServeState]] (delta
-    * patch), so the two paths cannot drift in shape. `candsName` is
-    * the tier's candidate-column name — DISTINCT per tier (`cands` /
-    * `h_cands` / `i_cands` / `pq_cands`) so a mis-paired artifact
-    * fails the serve entry point's schema guard by name. */
+  /** Assemble a serve artifact from its parts — shared by the build
+    * ([[serveBuild]]) and [[refreshAnnServeState]] (delta patch), so
+    * the two paths cannot drift in shape. Columns: section, cell, the
+    * codec's candidate column, cents, one column per extra section
+    * (PQ's codebook), meta; rows: cells / cents / extra sections / meta
+    * / files, every column a section does not own a typed null. */
   private def serveStateAssembly(
       spark: org.apache.spark.sql.SparkSession,
+      codec: ServeCodec,
       cellRows: DataFrame,
       centsRow: DataFrame,
-      metaStr: String,
-      files: Seq[String],
-      candsName: String = "cands"): DataFrame = {
+      h: ServeHeader,
+      metaStr: String): DataFrame = {
     import spark.implicits._
-    val candsT = cellRows.schema(candsName).dataType
-    val centsT = centsRow.schema("cents").dataType
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val extras = codec.sections.zip(codec.sectionValues(h)).map {
+      case (s, v) => s -> spark.range(1).select(v.as(s))
+    }
+    val types = Seq("cell" -> LongType,
+        codec.cands -> cellRows.schema(codec.cands).dataType,
+        "cents" -> centsRow.schema("cents").dataType) ++
+      extras.map { case (s, df) => s -> df.schema(s).dataType } :+
+      ("meta" -> StringType)
+    def section(name: String, rows: Dataset[_], own: (String, Column)*) =
+      rows.select(lit(name).as("section") +: types.map { case (c, t) =>
+        own.toMap.getOrElse(c, lit(null).cast(t).as(c)) }: _*)
     // NOT persisted (measured r13): caching the assembled union forces
     // eager full materialization and pins its shuffles at the fixed
     // partition count (InMemoryRelation plans skip AQE), which measured
     // 2-3× SLOWER end-to-end than letting each consumer's
     // section-filtered read prune the union lazily.
-    cellRows.select(
-        lit("cells").as("section"), col("cell"), col(candsName),
-        lit(null).cast(centsT).as("cents"),
-        lit(null).cast("string").as("meta"))
-      .unionByName(centsRow.select(
-        lit("cents").as("section"), lit(null).cast("long").as("cell"),
-        lit(null).cast(candsT).as(candsName), col("cents"),
-        lit(null).cast("string").as("meta")))
-      .unionByName(spark.range(1).select(
-        lit("meta").as("section"), lit(null).cast("long").as("cell"),
-        lit(null).cast(candsT).as(candsName),
-        lit(null).cast(centsT).as("cents"),
-        lit(metaStr).as("meta")))
-      .unionByName(files.toDF("_f").select(
-        lit("files").as("section"), lit(null).cast("long").as("cell"),
-        lit(null).cast(candsT).as(candsName),
-        lit(null).cast(centsT).as("cents"),
-        col("_f").as("meta")))
+    (Seq(section("cells", cellRows,
+        "cell" -> col("cell"), codec.cands -> col(codec.cands)),
+      section("cents", centsRow, "cents" -> col("cents"))) ++
+      extras.map { case (s, df) => section(s, df, s -> col(s)) } ++
+      Seq(section("meta", spark.range(1), "meta" -> lit(metaStr).as("meta")),
+        section("files", h.files.toDF("_f"), "meta" -> col("_f").as("meta"))))
+      .reduce(_ unionByName _)
   }
 
   /** FULL-OUTER concat-merge of a SMALL delta's keyed arrays into a
@@ -1942,12 +2194,8 @@ object StreamingOps {
       cellFiles: Option[Seq[String]] = None): String = {
     import graft.operators.Similarity
     val (cellsAt, tombsAt) = Similarity.resolvedIndex(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(tombsAt)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val nTombs =
-      if (fs.exists(new org.apache.hadoop.fs.Path(tombsAt)))
-        spark.read.parquet(tombsAt).distinct().count()
-      else 0L
+      tombstones(spark, tombsAt).map(_.distinct().count()).getOrElse(0L)
     // cell DATA-file count moves on every append (appends never
     // rewrite, they add files), so appended-but-unserved rows are
     // drift too; counted over the same hidden-excluded listing the
@@ -1971,13 +2219,20 @@ object StreamingOps {
       state: DataFrame,
       builder: String,
       required: Seq[String],
-      metaCol: String = "meta"): Map[String, String] = {
-    val metaRows = state.where(col("section") === "meta")
-      .select(col(metaCol)).collect()
+      metaCol: String = "meta"): Map[String, String] =
+    parsedMeta(state.where(col("section") === "meta").select(col(metaCol))
+      .collect().map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq,
+      builder, required)
+
+  /** [[artifactMeta]]'s validation over already-collected meta rows. */
+  private def parsedMeta(
+      metaRows: Seq[String],
+      builder: String,
+      required: Seq[String]): Map[String, String] = {
     require(metaRows.length == 1,
       s"$builder artifact must carry exactly one meta row, found " +
         s"${metaRows.length} — was this frame built by $builder?")
-    val metaStr = if (metaRows(0).isNullAt(0)) null else metaRows(0).getString(0)
+    val metaStr = metaRows.head
     require(metaStr != null && metaStr.nonEmpty,
       s"$builder artifact meta row is empty — was this frame built by " +
         s"$builder?")
@@ -2000,29 +2255,62 @@ object StreamingOps {
     params
   }
 
-  /** A meta parameter that must be an integer — validated like
-    * [[artifactMeta]]'s shape checks (a corrupted value fails naming
-    * the artifact, not with a bare NumberFormatException). */
-  private def metaInt(
-      params: Map[String, String], key: String, builder: String): Int =
-    try params(key).toInt
-    catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"$builder artifact meta key $key=${params(key)} is not an " +
-          s"integer — was this frame built by $builder?")
-    }
+  /** The snapshot coordinates every serve artifact records; an append
+    * moves only the last, a delete or compaction one of the first two. */
+  private val SnapshotKeys = Seq("generation", "n_tombstones", "n_cell_files")
+  private val BaseKeys = SnapshotKeys.take(2)
 
-  /** [[metaInt]] for double-valued meta parameters — a corrupted
-    * value fails naming the artifact and key, not with a bare
-    * NumberFormatException. */
-  private def metaDouble(
-      params: Map[String, String], key: String, builder: String): Double =
-    try params(key).toDouble
+  /** `k=v, k=v` over `keys` of `p`, for the drift refusals. */
+  private def coords(p: Map[String, String], keys: Seq[String]): String =
+    keys.map(k => s"$k=${p(k)}").mkString(", ")
+
+  /** A trusted `k=v;k=v` string (one [[serveSnapshotMeta]] wrote) as a map. */
+  private def metaMap(s: String): Map[String, String] =
+    s.split(';').map(_.split('=')).map(kv => kv(0) -> kv(1)).toMap
+
+  /** Read a serve artifact's header with ONE collect — the meta row,
+    * the codec's extra sections (PQ's codebook) and, for a refresh, the
+    * files section — and validate the meta row like [[artifactMeta]]. */
+  private def serveHeader(
+      state: DataFrame,
+      codec: ServeCodec,
+      required: Seq[String],
+      withFiles: Boolean = false): ServeHeader = {
+    val sections = Seq("meta") ++ codec.sections ++
+      (if (withFiles) Seq("files") else Nil)
+    val rows = state.where(col("section").isin(sections: _*))
+      .select((Seq("section", "meta") ++ codec.sections).map(col): _*)
+      .collect()
+    def of(section: String) = rows.filter(_.getString(0) == section).toSeq
+    val params = parsedMeta(
+      of("meta").map(r => if (r.isNullAt(1)) null else r.getString(1)),
+      codec.builder, required)
+    // the codebook is the only extra section any tier carries
+    val codebook = codec.sections.map { s =>
+      val cb = of(s)
+      require(cb.length == 1,
+        s"${codec.builder} artifact must carry exactly one $s row")
+      cb.head.getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](2)
+        .map(_.map(_.toArray).toArray).toArray
+    }.headOption.orNull
+    ServeHeader(params, codebook, of("files").map(_.getString(1)))
+  }
+
+  /** A numeric meta parameter — validated like [[artifactMeta]]'s shape
+    * checks (a corrupted value fails naming the artifact and key, not
+    * with a bare NumberFormatException). */
+  private def metaNum[T](params: Map[String, String], key: String,
+      builder: String, what: String)(parse: String => T): T =
+    try parse(params(key))
     catch {
       case _: NumberFormatException => throw new IllegalArgumentException(
-        s"$builder artifact meta key $key=${params(key)} is not a " +
-          s"number — was this frame built by $builder?")
+        s"$builder artifact meta key $key=${params(key)} is not $what — " +
+          s"was this frame built by $builder?")
     }
+  private def metaInt(p: Map[String, String], key: String, builder: String): Int =
+    metaNum(p, key, builder, "an integer")(_.toInt)
+  private def metaDouble(p: Map[String, String], key: String, builder: String): Double =
+    metaNum(p, key, builder, "a number")(_.toDouble)
 
   /** ONE-ROW order-free content identity of a history snapshot —
     * [[graft.operators.Pipeline.corpusChecksum]]'s commutative 60-bit
@@ -2116,17 +2404,12 @@ object StreamingOps {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       state: DataFrame): Unit = {
-    val keys = Seq("generation", "n_tombstones", "n_cell_files")
     val params = artifactMeta(state,
-      "annServeState / annServePqState / annServeHammingState / " +
-        "annServeInt8State",
-      required = keys)
-    val now = serveSnapshotMeta(spark, path).split(';')
-      .map(_.split('=')).map(kv => kv(0) -> kv(1)).toMap
-    require(keys.forall(k => params(k) == now(k)),
-      s"STALE serve state for $path: built at " +
-        keys.map(k => s"$k=${params(k)}").mkString(", ") +
-        s"; index is now at " + keys.map(k => s"$k=${now(k)}").mkString(", ") +
+      ServeCodec.all.map(_.builder).mkString(" / "), required = SnapshotKeys)
+    val now = metaMap(serveSnapshotMeta(spark, path))
+    require(SnapshotKeys.forall(k => params(k) == now(k)),
+      s"STALE serve state for $path: built at ${coords(params, SnapshotKeys)}" +
+        s"; index is now at ${coords(now, SnapshotKeys)}" +
         " — a stream serving from this artifact returns deleted rows or " +
         "misses appends/compactions silently; rebuild the serve state " +
         "from the current index")
@@ -2149,42 +2432,35 @@ object StreamingOps {
    * freshness guard compares. Cost: one pass over the cells section.
    */
   def serveStateStats(state: DataFrame): DataFrame = {
-    val (tier, builder, candsName) = serveTierOf(state)
-    val params = artifactMeta(state, builder,
-      required = Seq("generation", "n_tombstones", "n_cell_files"))
+    val codec = serveTierOf(state)
+    val params = artifactMeta(state, codec.builder, required = SnapshotKeys)
     state.where(col("section") === "cells")
-      .select(size(col(candsName)).as("_n"))
+      .select(size(col(codec.cands)).as("_n"))
       .agg(
         count(lit(1)).as("n_cells"),
         coalesce(sum(col("_n")), lit(0)).cast("long").as("n_members"),
         coalesce(max(col("_n")), lit(0)).cast("long").as("max_cell"),
         coalesce(round(avg(col("_n")), 6), lit(0.0)).as("avg_cell"))
-      .select(
-        lit(tier).as("tier"),
+      .select(Seq(
+        lit(codec.tier).as("tier"),
         lit(params.getOrElse("filtered", "0") != "0").as("filtered"),
-        col("n_cells"), col("n_members"), col("max_cell"), col("avg_cell"),
-        lit(params("generation")).cast("long").as("generation"),
-        lit(params("n_tombstones")).cast("long").as("n_tombstones"),
-        lit(params("n_cell_files")).cast("long").as("n_cell_files"))
+        col("n_cells"), col("n_members"), col("max_cell"), col("avg_cell")) ++
+        SnapshotKeys.map(k => lit(params(k)).cast("long").as(k)): _*)
   }
 
-  /** Serve-tier dispatch by candidate-column schema: (tier, builder,
-    * candsName). Every serve artifact names its tier through a
-    * DISTINCT candidate column, so the lifecycle operators
-    * ([[refreshAnnServeState]], [[maintainAnnIndexServing]]) resolve
-    * the builder from the frame itself instead of trusting a caller
-    * tag. */
-  private def serveTierOf(state: DataFrame): (String, String, String) = {
-    val cols = state.columns.toSet
-    if (cols("pq_cands")) ("pq", "annServePqState", "pq_cands")
-    else if (cols("h_cands")) ("hamming", "annServeHammingState", "h_cands")
-    else if (cols("i_cands")) ("int8", "annServeInt8State", "i_cands")
-    else if (cols("cands")) ("float", "annServeState", "cands")
-    else throw new IllegalArgumentException(
-      "not a serve artifact: the frame carries none of cands / pq_cands " +
-        "/ h_cands / i_cands — was it built by annServeState / " +
-        "annServePqState / annServeHammingState / annServeInt8State?")
-  }
+  /** Serve-tier dispatch by candidate-column schema. Every serve
+    * artifact names its tier through a DISTINCT candidate column, so
+    * the lifecycle operators ([[refreshAnnServeState]],
+    * [[maintainAnnIndexServing]]) resolve the codec from the frame
+    * itself instead of trusting a caller tag. */
+  private def serveTierOf(state: DataFrame): ServeCodec =
+    ServeCodec.of(state).getOrElse(throw new IllegalArgumentException(notServeArtifact))
+
+  /** The refusal for a frame that carries no tier's candidate column. */
+  private def notServeArtifact: String =
+    "not a serve artifact: the frame carries none of " +
+      ServeCodec.all.map(_.cands).mkString(" / ") + " — was it built by " +
+      ServeCodec.all.map(_.builder).mkString(" / ") + "?"
 
   /**
    * O(delta) REFRESH of a serve artifact after [[graft.operators
@@ -2194,10 +2470,11 @@ object StreamingOps {
    * diffs the index's current data files against the file set the
    * artifact recorded at build (`section = "files"`), reads ONLY the
    * new files (the appended rows — `basePath` keeps the cell
-   * partition column), encodes them in the ARTIFACT'S OWN tier —
-   * resolved from the frame itself ([[serveTierOf]]): float vectors
-   * verbatim, PQ codes through the artifact's FROZEN codebook section
-   * (the q229 frozen-quantizer contract: appends never re-derive the
+   * partition column), encodes them with the ARTIFACT'S OWN codec —
+   * resolved from the frame itself ([[serveTierOf]]) and the same
+   * [[ServeCodec.encode]] the build runs: float vectors verbatim, PQ
+   * codes through the artifact's FROZEN codebook section (the q229
+   * frozen-quantizer contract: appends never re-derive the
    * second-stage quantizer), Hamming sign bits at the meta row's
    * `bits`, int8 stats via the shared `int8Coded` expressions — and
    * concatenates the delta's per-cell candidate arrays onto the
@@ -2240,46 +2517,30 @@ object StreamingOps {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       state: DataFrame): DataFrame = {
-    import graft.operators.Similarity
-    val (tier, builder, candsName) = serveTierOf(state)
-    val tierKeys = tier match {
-      case "pq" => Seq("filtered", "m", "subDim", "k", "pqStride")
-      case "hamming" => Seq("bits", "filtered")
-      case _ => Seq("filtered")
-    }
-    val params = artifactMeta(state, builder,
-      required = tierKeys ++ Seq("generation", "n_tombstones", "n_cell_files"))
-    require(params("filtered") != "1",
-      "refreshAnnServeState: this artifact baked an OPAQUE metadata " +
-        "filter (built before the predicate-serialization convention) — " +
-        "the predicate cannot be recovered from the artifact alone; " +
-        s"rebuild ONCE with the current $builder(path, filter) and " +
-        "refreshes will work from then on (the predicate now travels " +
-        "in the meta row)")
-    // a filtered=2 artifact carries its own predicate — decode it so
+    val codec = serveTierOf(state)
+    val builder = codec.builder
+    val h = serveHeader(state, codec, codec.keys ++ SnapshotKeys,
+      withFiles = true)
+    val params = h.params
     // the delta rows pass through the exact expression the build baked
-    val servePred: Option[Column] =
-      if (params("filtered") == "2") Some(decodedFilter(params, builder))
-      else None
-    val now = serveSnapshotMeta(spark, path).split(';')
-      .map(_.split('=')).map(kv => kv(0) -> kv(1)).toMap
-    require(params("generation") == now("generation") &&
-        params("n_tombstones") == now("n_tombstones"),
+    val servePred = bakedFilter(params, builder, "refreshAnnServeState")
+    // ONE listing and ONE snapshot: the drift guard and the recorded
+    // meta read the same coordinates, so they agree by construction
+    val (cellsAt, tombsAt) = graft.operators.Similarity.resolvedIndex(spark, path)
+    val current = listDataFiles(spark, cellsAt)
+    val snapshot = serveSnapshotMeta(spark, path, Some(current))
+    val now = metaMap(snapshot)
+    require(BaseKeys.forall(k => params(k) == now(k)),
       s"refreshAnnServeState: the index moved past appends — artifact " +
-        s"built at generation=${params("generation")}, " +
-        s"n_tombstones=${params("n_tombstones")}; index is now at " +
-        s"generation=${now("generation")}, " +
-        s"n_tombstones=${now("n_tombstones")} — a delete or compaction " +
+        s"built at ${coords(params, BaseKeys)}; index is now at " +
+        s"${coords(now, BaseKeys)} — a delete or compaction " +
         "cannot be patched in (tombstones fold OUT of the arrays); " +
         s"rebuild with $builder")
-    val recorded = state.where(col("section") === "files")
-      .select(col("meta")).collect().map(_.getString(0)).toSet
+    val recorded = h.files.toSet
     require(recorded.nonEmpty,
       "refreshAnnServeState: this artifact predates the files-section " +
         s"convention (no section = \"files\" rows) — rebuild it once with " +
         s"$builder to enable incremental refresh")
-    val (cellsAt, tombsAt) = Similarity.resolvedIndex(spark, path)
-    val current = listDataFiles(spark, cellsAt)
     val vanished = recorded -- current.toSet
     require(vanished.isEmpty,
       s"refreshAnnServeState: ${vanished.size} file(s) the artifact read " +
@@ -2288,93 +2549,38 @@ object StreamingOps {
         s"lifecycle operators; rebuild with $builder")
     val newFiles = current.filterNot(recorded)
     val oldCells = state.where(col("section") === "cells")
-      .select(col("cell"), col(candsName))
+      .select(col("cell"), col(codec.cands))
     val centsRow = state.where(col("section") === "cents").select(col("cents"))
-    // the PQ codebook travels IN the artifact — the frozen quantizer
-    // the delta rows are encoded with (KB-scale bounded collect)
-    lazy val cb: Array[Array[Array[Double]]] = {
-      val cbRows = state.where(col("section") === "codebook")
-        .select(col("codebook")).collect()
-      require(cbRows.length == 1,
-        "annServePqState artifact must carry exactly one codebook row")
-      cbRows(0).getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](0)
-        .map(_.map(_.toArray).toArray).toArray
-    }
-    val metaPrefix = tier match {
-      case "pq" => filterMetaOf(params) +
-        s"m=${params("m")};subDim=${params("subDim")};" +
-        s"k=${params("k")};pqStride=${params("pqStride")};"
-      case "hamming" => s"bits=${params("bits")};" + filterMetaOf(params)
-      case _ => filterMetaOf(params)
-    }
-    val metaStr = metaPrefix + serveSnapshotMeta(spark, path, Some(current))
-    def assembled(cells: DataFrame): DataFrame = tier match {
-      case "pq" => pqServeAssembly(spark, cells, centsRow, cb, metaStr, current)
-      case _ => serveStateAssembly(spark, cells, centsRow, metaStr, current,
-        candsName = candsName)
-    }
+    // the filter fragment carries forward verbatim
+    val metaStr = serveMeta(codec, params, servePred.fold("filtered=0;")(_ =>
+      s"filtered=2;filterSql=${params("filterSql")};")) + snapshot
+    def assembled(cells: DataFrame): DataFrame =
+      serveStateAssembly(spark, codec, cells, centsRow,
+        h.copy(files = current), metaStr)
     if (newFiles.isEmpty) return assembled(oldCells)
     val fresh = readCellFiles(spark, cellsAt, newFiles)
       .withColumn("cell", col("cell").cast("long"))
     // appendAnnIndex refuses tombstoned ids and the coordinates above
     // pin the set unchanged, so new rows are clean by construction; the
     // anti-join is defense in depth at O(delta) cost
-    val fs = new org.apache.hadoop.fs.Path(tombsAt)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val freshLive =
-      if (fs.exists(new org.apache.hadoop.fs.Path(tombsAt)))
-        fresh.join(broadcast(spark.read.parquet(tombsAt)),
-          Seq("vec_id"), "left_anti")
-      else fresh
-    // the artifact's own predicate prunes the delta exactly as the
-    // build pruned the base scan; the PQ seed-clash check below stays
-    // UNFILTERED on purpose — the rebuild contract's codebook reads
-    // unfiltered live rows, so seed positions are filter-independent
+    val freshLive = withoutTombstones(spark, tombsAt, fresh)
+    // the codec's delta check reads the UNFILTERED rows on purpose (the
+    // PQ rebuild contract's codebook reads unfiltered live rows, so
+    // seed positions are filter-independent); the artifact's own
+    // predicate then prunes the delta exactly as the build pruned the
+    // base scan
+    codec.checkDelta(freshLive, h)
     val freshKept = servePred.map(freshLive.where).getOrElse(freshLive)
-    // tier-specific delta encoding — each matches its builder's
-    // candidate struct field-for-field (the assembly shares the code,
-    // so a drift would fail the unionByName, not ship)
-    val deltaCells = (tier match {
-      case "float" => freshKept.select(col("cell"),
-        struct(col("vec_id"), col("emb"), col("nrm")).as("_c"))
-      case "pq" =>
-        val k = metaInt(params, "k", builder)
-        val pqStride = metaInt(params, "pqStride", builder)
-        val subDim = metaInt(params, "subDim", builder)
-        val seedClash = freshLive
-          .where(pmod(col("vec_id"), lit(pqStride)) === 0 &&
-            col("vec_id") < k.toLong * pqStride)
-          .select(col("vec_id")).limit(1).collect()
-        require(seedClash.isEmpty,
-          s"refreshAnnServeState: appended vec_id " +
-            s"${seedClash.headOption.map(_.getLong(0)).getOrElse(-1L)} sits " +
-            s"at a PQ codebook seed position (vec_id ≡ 0 mod $pqStride, " +
-            s"< ${k.toLong * pqStride}) — a from-scratch annServePqState " +
-            "over the grown index would derive a DIFFERENT codebook, so " +
-            "patching with the artifact's frozen codebook would diverge " +
-            "from the rebuild contract; rebuild with annServePqState")
-        freshKept.select(col("cell"),
-          struct(col("vec_id").as("n_vec_id"),
-            Similarity.pqCodesCol(col("emb"), cb, subDim).as("codes")).as("_c"))
-      case "hamming" =>
-        val bits = metaInt(params, "bits", builder)
-        freshKept.select(col("cell"),
-          struct(col("vec_id").as("n_vec_id"),
-            Similarity.lshBucketCol(col("emb"), bits).as("sig")).as("_c"))
-      case _ => Similarity.int8Coded(
-          freshKept.select(col("vec_id"), col("emb").as("embedding"),
-            col("cell")), "n_", carry = Seq("cell"))
-        .select(col("cell"), struct(
-          col("n_vec_id"), col("n_q").as("q"), col("n_min").as("minv"),
-          col("n_s").as("scale"), col("n_d").as("d"), col("n_sum").as("sum"),
-          col("n_qq").as("qq")).as("_c"))
-    }).groupBy(col("cell")).agg(collect_list(col("_c")).as("_dcands"))
+    // the build's own encoding, so a delta candidate matches a rebuilt
+    // one field-for-field
+    val deltaCells = codec.encode(freshKept.select(codec.liveCols: _*), h, "_c")
+      .groupBy(col("cell")).agg(collect_list(col("_c")).as("_dcands"))
     // broadcast the delta side: untouched cell rows pass through the
     // join unshuffled; a cell whose first-ever member arrives in the
     // delta (a previously-empty inverted list) enters via the
     // anti-join leg of [[broadcastFullOuterMerge]]
     val merged = broadcastFullOuterMerge(oldCells, deltaCells, Seq("cell"),
-      candsName, "_dcands", concat(_, _))
+      codec.cands, "_dcands", concat(_, _))
     assembled(merged)
   }
 
@@ -2410,50 +2616,20 @@ object StreamingOps {
       serveState: DataFrame,
       maxDebtFrac: Double = 0.2,
       reclaimRetained: Boolean = false): (DataFrame, DataFrame) = {
-    import graft.operators.Similarity
-    val (tier, builder, _) = serveTierOf(serveState)
-    val tierKeys = tier match {
-      case "pq" => Seq("filtered", "m", "subDim", "k", "pqStride")
-      case "hamming" => Seq("bits", "filtered")
-      case _ => Seq("filtered")
-    }
-    val params = artifactMeta(serveState, builder,
-      required = tierKeys ++ Seq("generation", "n_tombstones", "n_cell_files"))
-    require(params("filtered") != "1",
-      "maintainAnnIndexServing: this artifact baked an OPAQUE metadata " +
-        "filter (built before the predicate-serialization convention) — " +
-        "no automatic repair can reproduce it; maintain the index with " +
-        s"maintainAnnIndex and rebuild ONCE with the current " +
-        s"$builder(path, filter) — repairs will work from then on (the " +
-        "predicate now travels in the meta row)")
-    // a filtered=2 artifact's predicate rides the meta row — the
-    // rebuild arm re-applies it, so a filtered serve state is repaired
-    // with the SAME baked predicate the original build validated
-    val servePred: Option[Column] =
-      if (params("filtered") == "2") Some(decodedFilter(params, builder))
-      else None
-    val report = Similarity.maintainAnnIndex(
+    val codec = serveTierOf(serveState)
+    val params = artifactMeta(serveState, codec.builder,
+      required = codec.keys ++ SnapshotKeys)
+    // the rebuild arm re-applies the baked predicate, so a filtered
+    // serve state is repaired with the SAME predicate the build validated
+    val servePred = bakedFilter(params, codec.builder, "maintainAnnIndexServing")
+    val report = graft.operators.Similarity.maintainAnnIndex(
       spark, path, maxDebtFrac, reclaimRetained)
-    val now = serveSnapshotMeta(spark, path).split(';')
-      .map(_.split('=')).map(kv => kv(0) -> kv(1)).toMap
-    val coordKeys = Seq("generation", "n_tombstones", "n_cell_files")
+    val now = metaMap(serveSnapshotMeta(spark, path))
     val (action, artifact) =
-      if (coordKeys.forall(k => params(k) == now(k))) ("none", serveState)
-      else if (params("generation") == now("generation") &&
-          params("n_tombstones") == now("n_tombstones"))
+      if (SnapshotKeys.forall(k => params(k) == now(k))) ("none", serveState)
+      else if (BaseKeys.forall(k => params(k) == now(k)))
         ("refreshed", refreshAnnServeState(spark, path, serveState))
-      else ("rebuilt", tier match {
-        case "pq" => annServePqState(spark, path,
-          m = metaInt(params, "m", builder),
-          subDim = metaInt(params, "subDim", builder),
-          k = metaInt(params, "k", builder),
-          pqStride = metaInt(params, "pqStride", builder),
-          filter = servePred)
-        case "hamming" => annServeHammingState(spark, path,
-          bits = metaInt(params, "bits", builder), filter = servePred)
-        case "int8" => annServeInt8State(spark, path, filter = servePred)
-        case _ => annServeState(spark, path, filter = servePred)
-      })
+      else ("rebuilt", serveBuild(codec, spark, path, params, servePred))
     (report.withColumn("serve_action", lit(action)), artifact)
   }
 
@@ -2531,62 +2707,8 @@ object StreamingOps {
       queries: DataFrame,
       state: DataFrame,
       k: Int,
-      nProbe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.graft.VectorFunctions.dotProduct
-    require(k > 0, s"k must be positive, got $k")
-    require(nProbe > 0, s"nProbe must be positive, got $nProbe")
-    // mis-pair guard before the meta read: a PQ artifact carries
-    // pq_cands (code bytes, no float vectors) — scoring it here would
-    // die on an unresolved column deep in plan construction
-    require(state.columns.contains("cands"),
-      "annSearchStream expects a FLOAT annServeState artifact (cands " +
-        "column); this frame has no cands — an annServePqState artifact " +
-        "(pq_cands) pairs with annSearchStreamPq")
-    artifactMeta(state, "annServeState", required = Seq("filtered"))
-    val idx = state.where(col("section") === "cells")
-      .select(col("cell"), col("cands"))
-    val centsRow = state.where(col("section") === "cents").select(col("cents"))
-    val q = queries
-      .select(col("vec_id").as("q_vec_id"),
-        col("embedding").cast("array<double>").as("q_emb"))
-      .withColumn("q_nrm", sqrt(dotProduct(col("q_emb"), col("q_emb"))))
-    // row-local ivfProbes: ascending sort on (−cos, cent_id) ≡ the
-    // batch window's (cos desc, cent_id) — negation is exact for IEEE
-    // doubles, so ties break identically
-    def centCos(c: Column): Column =
-      dotProduct(c.getField("c_emb"), col("q_emb")) /
-        (c.getField("c_nrm") * col("q_nrm"))
-    val probes = slice(sort_array(transform(col("cents"), c =>
-      struct((-centCos(c)).as("negccos"),
-        c.getField("cent_id").as("cell")))), 1, nProbe)
-    val probed = (0 until nProbe).foldLeft(
-      q.crossJoin(broadcast(centsRow)).withColumn("_probes", probes)) {
-      (cur, i) =>
-        cur.join(
-          idx.select(col("cell").as(s"_pc$i"), col("cands").as(s"_cd$i")),
-          when(size(col("_probes")) > i,
-            element_at(col("_probes"), i + 1).getField("cell"))
-            .otherwise(lit(null)) === col(s"_pc$i"),
-          "left")
-          .drop(s"_pc$i")
-    }
-    // row-local ivfRerank: self excluded, round-6 cosine, ascending
-    // (−cos, vec_id) ≡ (cos desc, vec_id), top-k slice
-    def candCos(c: Column): Column = round(
-      dotProduct(c.getField("emb"), col("q_emb")) /
-        (c.getField("nrm") * col("q_nrm")), 6)
-    val allCands = flatten(array_compact(
-      array((0 until nProbe).map(i => col(s"_cd$i")): _*)))
-    val top = slice(sort_array(transform(
-      filter(allCands, c => c.getField("vec_id") =!= col("q_vec_id")),
-      c => struct((-candCos(c)).as("negcos"),
-        c.getField("vec_id").as("n_vec_id"), candCos(c).as("cos")))), 1, k)
-    probed
-      .withColumn("_top", top)
-      .select(col("q_vec_id"), posexplode(col("_top")).as(Seq("_pos", "_c")))
-      .select(col("q_vec_id"), col("_c.n_vec_id").as("n_vec_id"),
-        col("_c.cos").as("cos"), (col("_pos") + 1).cast("long").as("rank"))
-  }
+      nProbe: Int = 2): DataFrame =
+    serveProbe(ServeCodec.Float, queries, state, k, nProbe, "k")
 
   /**
    * PQ-COMPRESSED serve state — [[annServeState]]'s memory-tier twin
@@ -2625,86 +2747,10 @@ object StreamingOps {
       subDim: Int = graft.operators.Similarity.PqSubDim,
       k: Int = graft.operators.Similarity.PqK,
       pqStride: Int = graft.operators.Similarity.PqStride,
-      filter: Option[Column] = None): DataFrame = {
-    import graft.operators.Similarity
-    val (cellsAt, tombsAt) = Similarity.resolvedIndex(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(tombsAt)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // capture-first (the annServeState discipline): the files section
-    // must record exactly the files the code arrays were read from
-    val files = listDataFiles(spark, cellsAt)
-    val scan = readCellFiles(spark, cellsAt, files)
-    val (pred, filterMeta) = serializedFilter(scan, filter, "annServePqState")
-    // live rows of the snapshot; the predicate (when present) applies
-    // to the raw scan so it pushes into the cell files as a parquet
-    // filter over the stored metadata columns
-    def liveRows(p: Option[Column]): DataFrame = {
-      val cells = p.map(scan.where).getOrElse(scan)
-        .select(col("vec_id"), col("emb"), col("cell").cast("long"))
-      if (fs.exists(new org.apache.hadoop.fs.Path(tombsAt)))
-        cells.join(broadcast(spark.read.parquet(tombsAt)),
-          Seq("vec_id"), "left_anti")
-      else cells
-    }
-    // FROZEN second-stage quantizer: the codebook reads the UNFILTERED
-    // live rows, so codes are filter-independent — two predicates over
-    // the same index share every quantizer artifact, and parity with
-    // the batch ivfPqTopKFiltered holds code-for-code
-    val cb = Similarity.pqCodebook(
-      liveRows(None).select(col("vec_id"), col("emb").as("embedding")),
-      m, subDim, k, pqStride)
-    val cellRows = liveRows(pred)
-      .select(col("cell"), struct(col("vec_id").as("n_vec_id"),
-        Similarity.pqCodesCol(col("emb"), cb, subDim).as("codes")).as("c"))
-      .groupBy(col("cell")).agg(collect_list(col("c")).as("pq_cands"))
-    val centsRow = spark.read
-      .parquet(graft.operators.Similarity.resolvedCentroids(spark, path))
-      .agg(collect_list(
-        struct(col("cent_id"), col("c_emb"), col("c_nrm"))).as("cents"))
-    pqServeAssembly(spark, cellRows, centsRow, cb,
-      filterMeta + s"m=$m;subDim=$subDim;k=$k;pqStride=$pqStride;" +
-        serveSnapshotMeta(spark, path, Some(files)),
-      files)
-  }
-
-  /** Assemble the PQ serve artifact from its parts — shared by
-    * [[annServePqState]] (full build) and [[refreshAnnServeState]]
-    * (delta patch), so the two paths cannot drift in shape. Sections:
-    * cells / cents / codebook / meta / files. */
-  private def pqServeAssembly(
-      spark: org.apache.spark.sql.SparkSession,
-      cellRows: DataFrame,
-      centsRow: DataFrame,
-      cb: Array[Array[Array[Double]]],
-      metaStr: String,
-      files: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val cbRow = spark.range(1).select(
-      typedLit(cb.map(_.map(_.toSeq).toSeq).toSeq).as("codebook"))
-    val candsT = cellRows.schema("pq_cands").dataType
-    val centsT = centsRow.schema("cents").dataType
-    val cbT = cbRow.schema("codebook").dataType
-    def row(section: String, cell: Column, cands: Column, cents: Column,
-        codebook: Column, meta: Column) =
-      Seq(lit(section).as("section"), cell.as("cell"), cands.as("pq_cands"),
-        cents.as("cents"), codebook.as("codebook"), meta.as("meta"))
-    // not persisted — the serveStateAssembly rationale (measured r13)
-    cellRows.select(row("cells", col("cell"), col("pq_cands"),
-        lit(null).cast(centsT), lit(null).cast(cbT),
-        lit(null).cast("string")): _*)
-      .unionByName(centsRow.select(row("cents", lit(null).cast("long"),
-        lit(null).cast(candsT), col("cents"), lit(null).cast(cbT),
-        lit(null).cast("string")): _*))
-      .unionByName(cbRow.select(row("codebook", lit(null).cast("long"),
-        lit(null).cast(candsT), lit(null).cast(centsT), col("codebook"),
-        lit(null).cast("string")): _*))
-      .unionByName(spark.range(1).select(row("meta", lit(null).cast("long"),
-        lit(null).cast(candsT), lit(null).cast(centsT), lit(null).cast(cbT),
-        lit(metaStr)): _*))
-      .unionByName(files.toDF("_f").select(row("files",
-        lit(null).cast("long"), lit(null).cast(candsT),
-        lit(null).cast(centsT), lit(null).cast(cbT), col("_f")): _*))
-  }
+      filter: Option[Column] = None): DataFrame =
+    serveBuild(ServeCodec.Pq, spark, path, Map("m" -> m.toString,
+      "subDim" -> subDim.toString, "k" -> k.toString,
+      "pqStride" -> pqStride.toString), filter)
 
   /**
    * PQ-compressed streaming ANN serving — [[annSearchStream]] in the
@@ -2724,76 +2770,8 @@ object StreamingOps {
       queries: DataFrame,
       state: DataFrame,
       kTop: Int,
-      nProbe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.graft.VectorFunctions.dotProduct
-    require(kTop > 0, s"kTop must be positive, got $kTop")
-    require(nProbe > 0, s"nProbe must be positive, got $nProbe")
-    // mis-pair guard before the meta read: a float artifact carries
-    // cands (full vectors, no codes/codebook) — its meta also lacks the
-    // PQ keys, but the schema check names the mistake most directly
-    require(state.columns.contains("pq_cands"),
-      "annSearchStreamPq expects a PQ annServePqState artifact (pq_cands " +
-        "column); this frame has no pq_cands — a float annServeState " +
-        "artifact (cands) pairs with annSearchStream")
-    val params = artifactMeta(state, "annServePqState",
-      required = Seq("m", "subDim", "k", "pqStride"))
-    val m = metaInt(params, "m", "annServePqState")
-    val subDim = metaInt(params, "subDim", "annServePqState")
-    val cbRows = state.where(col("section") === "codebook")
-      .select(col("codebook")).collect()
-    require(cbRows.length == 1,
-      "annServePqState artifact must carry exactly one codebook row")
-    val cb = cbRows(0).getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](0)
-      .map(_.map(_.toArray).toArray).toArray
-    val idx = state.where(col("section") === "cells")
-      .select(col("cell"), col("pq_cands"))
-    val centsRow = state.where(col("section") === "cents").select(col("cents"))
-    val q = queries
-      .select(col("vec_id").as("q_vec_id"),
-        col("embedding").cast("array<double>").as("q_emb"))
-      .withColumn("q_nrm", sqrt(dotProduct(col("q_emb"), col("q_emb"))))
-    def centCos(c: Column): Column =
-      dotProduct(c.getField("c_emb"), col("q_emb")) /
-        (c.getField("c_nrm") * col("q_nrm"))
-    val probes = slice(sort_array(transform(col("cents"), c =>
-      struct((-centCos(c)).as("negccos"),
-        c.getField("cent_id").as("cell")))), 1, nProbe)
-    // the per-query ADC lookup table — the batch `lut` expression
-    // verbatim, evaluated once per arriving row
-    val lut = array((0 until m).map { s =>
-      val qSub = slice(col("q_emb"), s * subDim + 1, subDim)
-      array(cb(s).indices.map(j =>
-        dotProduct(qSub, typedLit(cb(s)(j).toSeq))): _*)
-    }: _*)
-    val probed = (0 until nProbe).foldLeft(
-      q.crossJoin(broadcast(centsRow))
-        .withColumn("_probes", probes).withColumn("_lut", lut)) {
-      (cur, i) =>
-        cur.join(
-          idx.select(col("cell").as(s"_pc$i"), col("pq_cands").as(s"_cd$i")),
-          when(size(col("_probes")) > i,
-            element_at(col("_probes"), i + 1).getField("cell"))
-            .otherwise(lit(null)) === col(s"_pc$i"),
-          "left")
-          .drop(s"_pc$i")
-    }
-    def adcOf(c: Column): Column = round(
-      (0 until m).map { s =>
-        element_at(element_at(col("_lut"), s + 1),
-          element_at(c.getField("codes"), s + 1) + lit(1))
-      }.reduce(_ + _), 6)
-    val allCands = flatten(array_compact(
-      array((0 until nProbe).map(i => col(s"_cd$i")): _*)))
-    val top = slice(sort_array(transform(
-      filter(allCands, c => c.getField("n_vec_id") =!= col("q_vec_id")),
-      c => struct((-adcOf(c)).as("negadc"),
-        c.getField("n_vec_id").as("n_vec_id"), adcOf(c).as("adc")))), 1, kTop)
-    probed
-      .withColumn("_top", top)
-      .select(col("q_vec_id"), posexplode(col("_top")).as(Seq("_pos", "_c")))
-      .select(col("q_vec_id"), col("_c.n_vec_id").as("n_vec_id"),
-        col("_c.adc").as("adc"), (col("_pos") + 1).cast("long").as("rank"))
-  }
+      nProbe: Int = 2): DataFrame =
+    serveProbe(ServeCodec.Pq, queries, state, kTop, nProbe, "kTop")
 
   /**
    * BINARY-HAMMING serve state — the 42× rung of the serve-memory
@@ -2817,35 +2795,10 @@ object StreamingOps {
       path: String,
       bits: Int = 48,
       filter: Option[Column] = None): DataFrame = {
-    import graft.operators.Similarity
     require(bits >= 8 && bits <= 62,
       s"bits must be in [8, 62] (packed into one signed long), got $bits")
-    val (cellsAt, tombsAt) = Similarity.resolvedIndex(spark, path)
-    val files = listDataFiles(spark, cellsAt)
-    val scan = readCellFiles(spark, cellsAt, files)
-    val (pred, filterMeta) =
-      serializedFilter(scan, filter, "annServeHammingState")
-    val raw = scan
-      .where(pred.getOrElse(lit(true)))
-      .select(col("vec_id"), col("emb"), col("cell").cast("long"))
-    val fs = new org.apache.hadoop.fs.Path(tombsAt)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val live =
-      if (fs.exists(new org.apache.hadoop.fs.Path(tombsAt)))
-        raw.join(broadcast(spark.read.parquet(tombsAt)),
-          Seq("vec_id"), "left_anti")
-      else raw
-    val cellRows = live
-      .select(col("cell"), struct(col("vec_id").as("n_vec_id"),
-        Similarity.lshBucketCol(col("emb"), bits).as("sig")).as("c"))
-      .groupBy(col("cell")).agg(collect_list(col("c")).as("h_cands"))
-    val centsRow = spark.read
-      .parquet(graft.operators.Similarity.resolvedCentroids(spark, path))
-      .agg(collect_list(
-        struct(col("cent_id"), col("c_emb"), col("c_nrm"))).as("cents"))
-    serveStateAssembly(spark, cellRows, centsRow,
-      s"bits=$bits;" + filterMeta + serveSnapshotMeta(spark, path, Some(files)),
-      files, candsName = "h_cands")
+    serveBuild(ServeCodec.Hamming, spark, path, Map("bits" -> bits.toString),
+      filter)
   }
 
   /**
@@ -2868,61 +2821,8 @@ object StreamingOps {
       queries: DataFrame,
       state: DataFrame,
       k: Int,
-      nProbe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.graft.VectorFunctions.dotProduct
-    import graft.operators.Similarity
-    require(k > 0, s"k must be positive, got $k")
-    require(nProbe > 0, s"nProbe must be positive, got $nProbe")
-    require(state.columns.contains("h_cands"),
-      "annSearchStreamHamming expects a HAMMING annServeHammingState " +
-        "artifact (h_cands column); this frame has no h_cands — float " +
-        "(cands), PQ (pq_cands) and int8 (i_cands) artifacts pair with " +
-        "annSearchStream / annSearchStreamPq / annSearchStreamInt8")
-    val params = artifactMeta(state, "annServeHammingState",
-      required = Seq("bits"))
-    val bits = metaInt(params, "bits", "annServeHammingState")
-    val idx = state.where(col("section") === "cells")
-      .select(col("cell"), col("h_cands"))
-    val centsRow = state.where(col("section") === "cents").select(col("cents"))
-    val q = queries
-      .select(col("vec_id").as("q_vec_id"),
-        col("embedding").cast("array<double>").as("q_emb"))
-      .withColumn("q_nrm", sqrt(dotProduct(col("q_emb"), col("q_emb"))))
-      .withColumn("q_sig", Similarity.lshBucketCol(col("q_emb"), bits))
-    def centCos(c: Column): Column =
-      dotProduct(c.getField("c_emb"), col("q_emb")) /
-        (c.getField("c_nrm") * col("q_nrm"))
-    val probes = slice(sort_array(transform(col("cents"), c =>
-      struct((-centCos(c)).as("negccos"),
-        c.getField("cent_id").as("cell")))), 1, nProbe)
-    val probed = (0 until nProbe).foldLeft(
-      q.crossJoin(broadcast(centsRow)).withColumn("_probes", probes)) {
-      (cur, i) =>
-        cur.join(
-          idx.select(col("cell").as(s"_pc$i"), col("h_cands").as(s"_cd$i")),
-          when(size(col("_probes")) > i,
-            element_at(col("_probes"), i + 1).getField("cell"))
-            .otherwise(lit(null)) === col(s"_pc$i"),
-          "left")
-          .drop(s"_pc$i")
-    }
-    val allCands = flatten(array_compact(
-      array((0 until nProbe).map(i => col(s"_cd$i")): _*)))
-    // natural ascending struct order ≡ the batch window's
-    // (hamming asc, n_vec_id) — both fields sort ascending
-    val top = slice(sort_array(transform(
-      filter(allCands, c => c.getField("n_vec_id") =!= col("q_vec_id")),
-      c => struct(
-        bit_count(col("q_sig").bitwiseXOR(c.getField("sig"))).cast("long")
-          .as("hamming"),
-        c.getField("n_vec_id").as("n_vec_id")))), 1, k)
-    probed
-      .withColumn("_top", top)
-      .select(col("q_vec_id"), posexplode(col("_top")).as(Seq("_pos", "_c")))
-      .select(col("q_vec_id"), col("_c.n_vec_id").as("n_vec_id"),
-        col("_c.hamming").as("hamming"),
-        (col("_pos") + 1).cast("long").as("rank"))
-  }
+      nProbe: Int = 2): DataFrame =
+    serveProbe(ServeCodec.Hamming, queries, state, k, nProbe, "k")
 
   /**
    * INT8-SDC serve state — the 4× rung of the serve-memory ladder:
@@ -2940,36 +2840,8 @@ object StreamingOps {
   def annServeInt8State(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      filter: Option[Column] = None): DataFrame = {
-    import graft.operators.Similarity
-    val (cellsAt, tombsAt) = Similarity.resolvedIndex(spark, path)
-    val files = listDataFiles(spark, cellsAt)
-    val scan = readCellFiles(spark, cellsAt, files)
-    val (pred, filterMeta) = serializedFilter(scan, filter, "annServeInt8State")
-    val raw = scan
-      .where(pred.getOrElse(lit(true)))
-      .select(col("vec_id"), col("emb").as("embedding"), col("cell").cast("long"))
-    val fs = new org.apache.hadoop.fs.Path(tombsAt)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val live =
-      if (fs.exists(new org.apache.hadoop.fs.Path(tombsAt)))
-        raw.join(broadcast(spark.read.parquet(tombsAt)),
-          Seq("vec_id"), "left_anti")
-      else raw
-    val cellRows = Similarity.int8Coded(live, "n_", carry = Seq("cell"))
-      .select(col("cell"), struct(
-        col("n_vec_id"), col("n_q").as("q"), col("n_min").as("minv"),
-        col("n_s").as("scale"), col("n_d").as("d"), col("n_sum").as("sum"),
-        col("n_qq").as("qq")).as("c"))
-      .groupBy(col("cell")).agg(collect_list(col("c")).as("i_cands"))
-    val centsRow = spark.read
-      .parquet(graft.operators.Similarity.resolvedCentroids(spark, path))
-      .agg(collect_list(
-        struct(col("cent_id"), col("c_emb"), col("c_nrm"))).as("cents"))
-    serveStateAssembly(spark, cellRows, centsRow,
-      filterMeta + serveSnapshotMeta(spark, path, Some(files)),
-      files, candsName = "i_cands")
-  }
+      filter: Option[Column] = None): DataFrame =
+    serveBuild(ServeCodec.Int8, spark, path, Map.empty, filter)
 
   /**
    * Streaming INT8-SDC ANN serving — [[annSearchStream]] in the
@@ -2991,81 +2863,80 @@ object StreamingOps {
       queries: DataFrame,
       state: DataFrame,
       kTop: Int,
-      nProbe: Int = 2): DataFrame = {
+      nProbe: Int = 2): DataFrame =
+    serveProbe(ServeCodec.Int8, queries, state, kTop, nProbe, "kTop")
+
+  /**
+   * The ONE serve probe behind the four `annSearchStream*` entry
+   * points, entirely STATELESS and row-local:
+   *  - probe selection: the arriving row ranks the (1-row broadcast)
+   *    centroid array by (cosine desc, cent_id) with a row-local
+   *    `sort_array` and keeps its top `nProbe` cells — the exact
+   *    [[graft.operators.Similarity.ivfCosineTopK]] probe definition;
+   *    every tier ranks cells in FLOAT space (the coarse quantizer is
+   *    never compressed);
+   *  - candidate fetch: ≤ nProbe 1:≤1 left joins against the per-cell
+   *    candidate arrays — never an explode before the verdict;
+   *  - re-rank: self excluded, each candidate mapped to the codec's
+   *    sort struct ([[ServeCodec.ranked]]), ascending `sort_array` and
+   *    a top-k `slice` on the ONE row; `posexplode` then emits
+   *    (q_vec_id, n_vec_id, <score>, rank).
+   * The artifact header (meta, plus PQ's codebook) is read with one
+   * collect — the only driver-side action.
+   */
+  private def serveProbe(
+      codec: ServeCodec,
+      queries: DataFrame,
+      state: DataFrame,
+      k: Int,
+      nProbe: Int,
+      kName: String): DataFrame = {
     import org.apache.spark.sql.graft.VectorFunctions.dotProduct
-    import graft.operators.Similarity
-    require(kTop > 0, s"kTop must be positive, got $kTop")
+    require(k > 0, s"$kName must be positive, got $k")
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
-    require(state.columns.contains("i_cands"),
-      "annSearchStreamInt8 expects an INT8 annServeInt8State artifact " +
-        "(i_cands column); this frame has no i_cands — float (cands), " +
-        "PQ (pq_cands) and hamming (h_cands) artifacts pair with " +
-        "annSearchStream / annSearchStreamPq / annSearchStreamHamming")
-    artifactMeta(state, "annServeInt8State",
-      required = Seq("generation", "n_tombstones", "n_cell_files"))
+    // mis-pair guard before the header read: scoring another tier's
+    // candidates would die on an unresolved field deep in plan
+    // construction (or, for a matching field name, score garbage)
+    require(state.columns.contains(codec.cands),
+      s"${codec.search} expects a ${codec.tier} ${codec.builder} artifact " +
+        s"(${codec.cands} column); this frame has no ${codec.cands} — " +
+        ServeCodec.of(state).map(o => s"a ${o.tier} ${o.builder} artifact " +
+          s"(${o.cands}) pairs with ${o.search}").getOrElse(notServeArtifact))
+    val h = serveHeader(state, codec, codec.keys)
     val idx = state.where(col("section") === "cells")
-      .select(col("cell"), col("i_cands"))
+      .select(col("cell"), col(codec.cands))
     val centsRow = state.where(col("section") === "cents").select(col("cents"))
-    val q = Similarity.int8Coded(
-        queries.select(col("vec_id"), col("embedding")), "q_",
-        carry = Seq("embedding"))
-      .withColumn("q_emb", col("embedding").cast("array<double>"))
-      .withColumn("q_nrm", sqrt(dotProduct(col("q_emb"), col("q_emb"))))
-      .drop("embedding")
+    val q = codec.query(queries, h)
+    // row-local ivfProbes: ascending sort on (−cos, cent_id) ≡ the
+    // batch window's (cos desc, cent_id) — negation is exact for IEEE
+    // doubles, so ties break identically
     def centCos(c: Column): Column =
       dotProduct(c.getField("c_emb"), col("q_emb")) /
         (c.getField("c_nrm") * col("q_nrm"))
     val probes = slice(sort_array(transform(col("cents"), c =>
       struct((-centCos(c)).as("negccos"),
         c.getField("cent_id").as("cell")))), 1, nProbe)
-    val probed = (0 until nProbe).foldLeft(
-      q.crossJoin(broadcast(centsRow)).withColumn("_probes", probes)) {
-      (cur, i) =>
-        cur.join(
-          idx.select(col("cell").as(s"_pc$i"), col("i_cands").as(s"_cd$i")),
-          when(size(col("_probes")) > i,
-            element_at(col("_probes"), i + 1).getField("cell"))
-            .otherwise(lit(null)) === col(s"_pc$i"),
-          "left")
-          .drop(s"_pc$i")
-    }
-    // the int8SdcTopK score tree verbatim: exact long inner product,
-    // then the fixed-order double corrections (q-side stats from the
-    // shared int8Coded, candidate stats from the carried struct)
-    def sdcOf(c: Column): Column = {
-      val ipq = aggregate(
-        zip_with(col("q_q"), c.getField("q"), (a, b) => (a * b).cast("long")),
-        lit(0L), (s, v) => s + v)
-      val ip = col("q_min") * c.getField("minv") * c.getField("d") +
-        col("q_min") * c.getField("scale") * c.getField("sum") +
-        c.getField("minv") * col("q_s") * col("q_sum") +
-        col("q_s") * c.getField("scale") * ipq
-      val nq = col("q_min") * col("q_min") * col("q_d") +
-        lit(2.0) * col("q_min") * col("q_s") * col("q_sum") +
-        col("q_s") * col("q_s") * col("q_qq")
-      val nn = c.getField("minv") * c.getField("minv") * c.getField("d") +
-        lit(2.0) * c.getField("minv") * c.getField("scale") *
-          c.getField("sum") +
-        c.getField("scale") * c.getField("scale") * c.getField("qq")
-      when(nq > 0 && nn > 0, round(ip / (sqrt(nq) * sqrt(nn)), 6))
+    val crossed = q.crossJoin(broadcast(centsRow))
+      .withColumn("_probes", probes).withColumns(codec.probeCols(h))
+    val probed = (0 until nProbe).foldLeft(crossed) { (cur, i) =>
+      cur.join(
+        idx.select(col("cell").as(s"_pc$i"), col(codec.cands).as(s"_cd$i")),
+        when(size(col("_probes")) > i,
+          element_at(col("_probes"), i + 1).getField("cell"))
+          .otherwise(lit(null)) === col(s"_pc$i"),
+        "left")
+        .drop(s"_pc$i")
     }
     val allCands = flatten(array_compact(
       array((0 until nProbe).map(i => col(s"_cd$i")): _*)))
-    // ascending (coalesced −cos_sdc, n_vec_id) ≡ the batch window's
-    // (cos_sdc DESC NULLS LAST, n_vec_id): a null score (zero-norm
-    // reconstruction) coalesces to +∞ and sorts last, exactly the
-    // batch nulls-last rule
     val top = slice(sort_array(transform(
-      filter(allCands, c => c.getField("n_vec_id") =!= col("q_vec_id")),
-      c => struct(
-        coalesce(-sdcOf(c), lit(Double.MaxValue)).as("negsdc"),
-        c.getField("n_vec_id").as("n_vec_id"),
-        sdcOf(c).as("cos_sdc")))), 1, kTop)
+      filter(allCands, c => c.getField(codec.idField) =!= col("q_vec_id")),
+      c => codec.ranked(c, h))), 1, k)
     probed
       .withColumn("_top", top)
       .select(col("q_vec_id"), posexplode(col("_top")).as(Seq("_pos", "_c")))
       .select(col("q_vec_id"), col("_c.n_vec_id").as("n_vec_id"),
-        col("_c.cos_sdc").as("cos_sdc"),
+        col(s"_c.${codec.score}").as(codec.score),
         (col("_pos") + 1).cast("long").as("rank"))
   }
 

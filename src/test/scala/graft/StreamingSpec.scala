@@ -2070,6 +2070,73 @@ class StreamingSpec extends SparkSpec {
     }
     nf.getMessage should include("n=three")
     nf.getMessage should include("ingestState")
+    // every search entry point crossed with every tier's artifact: a
+    // mis-pair names the column the search expected and the search the
+    // artifact pairs with; a matched pair builds its plan
+    val states = Seq(
+      ("cands", "annSearchStream", floatState),
+      ("pq_cands", "annSearchStreamPq", pqState),
+      ("h_cands", "annSearchStreamHamming",
+        StreamingOps.annServeHammingState(spark, idx)),
+      ("i_cands", "annSearchStreamInt8", StreamingOps.annServeInt8State(spark, idx)))
+    val searches: Seq[(String, org.apache.spark.sql.DataFrame => Any)] = Seq(
+      "cands" -> (st => StreamingOps.annSearchStream(qdf, st, k = 10)),
+      "pq_cands" -> (st => StreamingOps.annSearchStreamPq(qdf, st, kTop = 10)),
+      "h_cands" -> (st => StreamingOps.annSearchStreamHamming(qdf, st, k = 10)),
+      "i_cands" -> (st => StreamingOps.annSearchStreamInt8(qdf, st, kTop = 10)))
+    val misPaired = for {
+      (expected, search) <- searches
+      (own, ownSearch, st) <- states
+    } yield {
+      if (own == expected) { search(st); 0 }
+      else {
+        val ex = intercept[IllegalArgumentException](search(st))
+        withClue(s"$ownSearch artifact into the $expected search: ") {
+          ex.getMessage should include(s"no $expected")
+          ex.getMessage should include(s"pairs with $ownSearch")
+        }
+        1
+      }
+    }
+    misPaired.sum shouldBe 12
+  }
+
+  test("serve artifact format: each tier's parquet-round-tripped columns, sections and meta keys are pinned") {
+    import graft.operators.Similarity
+    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val idx = java.nio.file.Files.createTempDirectory("ann_format_spec").toString
+    Similarity.buildAnnIndex(e, idx, stride = 100)
+    val cents = "cents array<struct<cent_id:bigint,c_emb:array<double>,c_nrm:double>>"
+    val common = Set("filtered", "generation", "n_cell_files", "n_tombstones")
+    val base = Set("cells", "cents", "files", "meta")
+    val pinned = Seq(
+      ("float", StreamingOps.annServeState(spark, idx), Seq("section string",
+        "cell bigint",
+        "cands array<struct<vec_id:bigint,emb:array<double>,nrm:double>>",
+        cents, "meta string"), base, common),
+      ("pq", StreamingOps.annServePqState(spark, idx), Seq("section string",
+        "cell bigint", "pq_cands array<struct<n_vec_id:bigint,codes:array<int>>>",
+        cents, "codebook array<array<array<double>>>", "meta string"),
+        base + "codebook", common ++ Set("k", "m", "pqStride", "subDim")),
+      ("hamming", StreamingOps.annServeHammingState(spark, idx), Seq(
+        "section string", "cell bigint",
+        "h_cands array<struct<n_vec_id:bigint,sig:bigint>>", cents,
+        "meta string"), base, common + "bits"),
+      ("int8", StreamingOps.annServeInt8State(spark, idx), Seq("section string",
+        "cell bigint", "i_cands array<struct<n_vec_id:bigint,q:array<int>," +
+          "minv:double,scale:double,d:bigint,sum:bigint,qq:bigint>>",
+        cents, "meta string"), base, common))
+    for ((tier, built, columns, sections, keys) <- pinned) withClue(s"$tier: ") {
+      val dir = java.nio.file.Files.createTempDirectory("ann_format_st").toString
+      built.write.mode("overwrite").parquet(dir)
+      val st = spark.read.parquet(dir)
+      st.schema.fields.map(f => s"${f.name} ${f.dataType.simpleString}")
+        .toSeq shouldBe columns
+      st.select("section").distinct().collect().map(_.getString(0))
+        .toSet shouldBe sections
+      st.where(col("section") === "meta").select("meta").head().getString(0)
+        .split(';').map(_.split('=')(0)).toSet shouldBe keys
+    }
   }
 
   test("requireScreenStateHistoryCurrent: screen states pin their history snapshot by content") {
